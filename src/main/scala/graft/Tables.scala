@@ -5,18 +5,67 @@ import org.apache.spark.sql.types._
 
 /** Loaders + declared schemas for the fixture tables (TESTDATA.md /
   * FIXTURES.md). Parquet is self-describing, so loads trust the file
-  * schema; the declared StructTypes document the contract and are used
-  * where schema must be explicit (ingest `from_json`, streaming reads —
+  * schema — inferred ONCE per session and path (`parquet` below); the
+  * declared StructTypes document the contract and are used where
+  * schema must be explicit (ingest `from_json`, streaming reads —
   * SURVEY.md §1.3: explicit schemas, never inference, at 100 TB).
   *
   * Scale note: each table is a single parquet file in the fixtures, but
-  * every loader goes through `spark.read.parquet(dir)` so a production
+  * every loader goes through `parquet(spark, path)` so a production
   * deployment can point the same code at a partitioned directory tree
   * (e.g. events partitioned by date) and get partition pruning for free.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Inferred schemas by (application id, qualified path), each with
+    * the file fingerprint it was inferred from. */
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, String), (Seq[(String, Long, Long)], StructType)]
+
+  /** `spark.read.parquet(path)` without the per-read inference job.
+    * Schema inference reads the parquet footers in a Spark job — at
+    * small scale that fixed cost outweighs the query it feeds, and
+    * every registry query and the rollup rewrite load tables at build
+    * time. The first read of a path in an application infers as
+    * usual; later reads pass the cached schema to
+    * `spark.read.schema(...)`, which plans without a job. The cache is
+    * keyed on the application id and the qualified path, and an entry
+    * is reused only while the fingerprint — name, length and
+    * modification time of the path and of its direct children —
+    * still matches, so a file or directory rewritten in place is
+    * inferred again. Sessions of one application share entries (every
+    * graft session reads parquet under the same `sessionConf`). A path
+    * that cannot be listed reads uncached (and fails the way
+    * `spark.read.parquet` fails). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fingerprinted =
+      try {
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        val st = fs.getFileStatus(p)
+        val children =
+          if (st.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
+          else Nil
+        Some((fs.makeQualified(p).toString,
+          (st +: children).map(c =>
+            (c.getPath.getName, c.getLen, c.getModificationTime))))
+      } catch { case _: java.io.IOException => None }
+    fingerprinted match {
+      case None => spark.read.parquet(path)
+      case Some((qualified, fp)) =>
+        val appId = spark.sparkContext.applicationId
+        schemas.get((appId, qualified)) match {
+          case Some((`fp`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemas.keys.foreach { k => if (k._1 != appId) schemas.remove(k) }
+            schemas.put((appId, qualified), (fp, df.schema))
+            df
+        }
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

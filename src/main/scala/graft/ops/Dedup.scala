@@ -228,70 +228,35 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Connected components of an undirected pair graph by iterative
-    * min-label propagation (the standard MapReduce/Pregel formulation —
-    * Kiveris et al. 2014 "Connected Components in MapReduce and
-    * Beyond" analyze the family): every vertex starts labeled with its
-    * own id; each round it takes the min of its label and its
-    * neighbors' labels; at fixpoint every member of a component holds
-    * the component's minimum id.
+  /** Connected components of an undirected pair graph (id_a, id_b):
+    * the near-dedup adapter over `Graph.ccStar` (Kiveris et al. 2014's
+    * large-star/small-star alternation), so graft has one CC
+    * implementation. Every vertex is labeled with its component's
+    * minimum id; ids may be any orderable type (Long doc ids, String
+    * names for q303/q328).
     *
-    * Converges in O(component diameter) rounds — near-dup clusters are
-    * shallow (a handful of rounds); `maxIter` bounds pathological
-    * chains, and hitting it THROWS rather than returning a silently
-    * under-merged labeling (the whole point of this function over the
-    * greedy pass is exactness). Each round: one join edges⋈labels +
-    * one min-aggregate, both keyed on vertex ids; the convergence test
-    * rides the same checkpointed frame (prev carried as a column), not
-    * an extra join. The driver-side loop materializes each round via
-    * localCheckpoint — REQUIRED, not an optimization: iterative
-    * self-referential lineage otherwise grows exponentially and
-    * re-executes prior rounds on every action. Superseded rounds'
-    * checkpoint blocks are reclaimed by the ContextCleaner once the
-    * driver drops the reference (the standard iterative-algorithm
-    * pattern; the tables involved are label/edge rows of the PAIR
-    * graph, not the corpus).
+    * O(log n) alternation rounds, each one checkpointed job over the
+    * PAIR graph (never the corpus); `maxIter` caps the rounds, and
+    * hitting it THROWS rather than returning a silently under-merged
+    * labeling (the whole point of this function over the greedy pass
+    * is exactness). ccStar releases each superseded round's
+    * checkpoint as it goes, so one checkpoint — the one the result
+    * reads from — outlives the call.
     *
-    * Returns (id, component) for every vertex appearing in `pairs`. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("v"), col("comp")), Seq("v"))
-        .groupBy(col("u").as("id"))
-        .agg(min(col("comp")).as("nbr_comp"))
-      val updated = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-          col("comp").as("__prev"))
-        .localCheckpoint(true)
-      converged = updated.filter(col("comp") < col("__prev")).isEmpty
-      labels = updated.drop("__prev")
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter rounds — a component " +
-        "has eccentricity above the bound; raise maxIter (rounds needed = " +
-        "max distance from any vertex to its component's minimum id)")
-    labels
-  }
+    * Returns (id, comp) for every vertex of a pair with id_a ≠ id_b. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    Graph.ccStar(pairs.select(col("id_a").as("u"), col("id_b").as("v")),
+        maxRounds = maxIter)
+      .select(col("node").as("id"), col("comp"))
 
   /** EXACT near-dedup: keep one representative (the minimum id) per
     * connected component of the thresholded candidate-pair graph —
     * the canonical-per-component semantics `nearDedup`'s one-pass
     * greedy approximates. For a chain a~b, b~c the greedy pass keeps
     * {a} while dropping c without ever comparing it to a; this keeps
-    * exactly one doc per transitive cluster. Costs O(diameter)
-    * join+agg rounds over the (small) pair graph — the corpus itself
-    * is touched once for candidates and once for the final anti-join. */
+    * exactly one doc per transitive cluster. Costs O(log n) ccStar
+    * rounds over the (small) pair graph — the corpus itself is
+    * touched once for candidates and once for the final anti-join. */
   def nearDedupExact(df: DataFrame, idCol: String, textCol: String,
                      threshold: Double, shingleN: Int = 3, numHashes: Int = 64,
                      bands: Int = 16, maxIter: Int = 20): DataFrame =
@@ -299,8 +264,6 @@ object Dedup {
       lshCandidatePairs(df, idCol, textCol, shingleN, numHashes, bands),
       threshold, maxIter)
 
-  /** `nearDedupExact` from PRECOMPUTED candidate pairs — see
-    * nearDedupFromPairs for why the pair pass is a parameter. */
   /** Thresholded candidate pairs → component labels — the shared
     * intermediate both canonical-selection policies (min-id q81,
     * best-quality q104) consume, so one CC run can feed both. */
@@ -310,6 +273,8 @@ object Dedup {
       pairs.filter(col("est_jaccard") >= threshold).select("id_a", "id_b"),
       maxIter)
 
+  /** `nearDedupExact` from PRECOMPUTED candidate pairs — see
+    * nearDedupFromPairs for why the pair pass is a parameter. */
   def nearDedupExactFromPairs(df: DataFrame, idCol: String, pairs: DataFrame,
                               threshold: Double, maxIter: Int = 20): DataFrame =
     nearDedupExactFromComponents(df, idCol,

@@ -468,7 +468,7 @@ object Graph {
     * a directed edge list (symmetrize first for undirected
     * reachability), level-synchronous frontier expansion — the
     * traversal primitive beside pageRank/hits (scores), kCore
-    * (density), and Dedup.connectedComponents (labels): "how far is
+    * (density), and ccStar (labels): "how far is
     * every node from this set", the reachability/blast-radius query.
     *
     * Exactly the textbook frontier algorithm in joins: the level-i
@@ -1086,9 +1086,10 @@ object Graph {
 
   /** CONNECTED COMPONENTS via alternating LARGE-STAR / SMALL-STAR
     * (Kiveris et al. 2014, "Connected Components in MapReduce and
-    * Beyond") — the O(log n)-ROUND CC that replaces the O(diameter)
-    * min-label loops (`labelPropagate`, `Dedup.connectedComponents`)
-    * when components can be DEEP: a 10⁶-node path costs ~10⁶ hashmin
+    * Beyond") — graft's one exact CC (`Dedup.connectedComponents` is
+    * its near-dedup adapter). It takes O(log n) ROUNDS where min-label
+    * propagation (`labelPropagate`) takes O(diameter), which matters
+    * when components are DEEP: a 10⁶-node path costs ~10⁶ hashmin
     * supersteps but ~20 star rounds, because each round REWRITES the
     * edge list toward the component's star (the doubling trade the
     * labelPropagate scaladoc names — edges are mutated, labels aren't
@@ -1113,7 +1114,7 @@ object Graph {
     * integer min arithmetic — engine-replayable, so the whole
     * iterated build hash-gates against a WITH RECURSIVE closure
     * (q343). Input: (u, v) pairs, u ≠ v rows tolerated either order;
-    * isolated nodes don't appear (the connectedComponents contract).
+    * isolated nodes don't appear.
     * Output: (node, comp). */
   private[graft] def ccCanon(df: DataFrame): DataFrame =
     df.filter(col("u") =!= col("v"))
@@ -2298,7 +2299,7 @@ object Graph {
     * the checkpointed RDD sits behind the LogicalRDD node the
     * checkpoint call returned; Dataset.unpersist only covers
     * CacheManager entries and would silently leak it. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     try df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false); ()

@@ -334,10 +334,12 @@ object RewriteAggOnRollup extends Rule[LogicalPlan] {
 
   /** A FRESH instance of the rollup's analyzed relation per rewrite
     * (newInstance re-ids the attributes — two rewrites in one plan, or
-    * across queries, must not share exprIds). */
+    * across queries, must not share exprIds). Read through
+    * `Tables.parquet`, so only the first rewrite after the rollup is
+    * (re)written pays a schema-inference job inside the optimizer. */
   private def rollupRelation(path: String): Option[LogicalPlan] = {
     try {
-      val analyzed = SparkSession.active.read.parquet(path)
+      val analyzed = graft.Tables.parquet(SparkSession.active, path)
         .queryExecution.analyzed
       analyzed match {
         case lr: LogicalRelation => Some(lr.newInstance())

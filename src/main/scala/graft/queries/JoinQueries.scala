@@ -634,16 +634,16 @@ object JoinQueries {
 
     // CONNECTED COMPONENTS VIA STAR CONTRACTION (ops.Graph.ccStar —
     // Kiveris et al. 2014's alternating large-star/small-star, r15):
-    // the O(log n)-ROUND CC beside the O(diameter) min-label loops
-    // (q81/q212/q303's hashmin). The input is the graph where hashmin
+    // the O(log n)-ROUND CC beside q212's unrolled min-label
+    // supersteps (hashmin). The input is the graph where hashmin
     // is at its WORST: per-user event chains ordered by time — paths
     // ~70 nodes deep at sf0.01 (~700 at sf0.1), so hashmin needs a
     // superstep per hop while star contraction collapses each chain
     // in a handful of edge-rewriting rounds (GraphSpec asserts the
     // 200-node path lands under the 30-round cap and that ccStar ≡
-    // the min-label fixpoint on cycles/stars/random graphs). The
-    // oracle is the INDEPENDENT closed-form answer the construction
-    // admits — a chain links ALL of a user's events, so each
+    // a union-find min-label reference on cycles/stars/random
+    // graphs). The oracle is the INDEPENDENT closed-form answer the
+    // construction admits — a chain links ALL of a user's events, so each
     // component is exactly one multi-event user (comp = min event_id,
     // size = event count) — the q303 discipline: same answer, via a
     // route that shares no code with the iterated operator.
@@ -1822,7 +1822,7 @@ object JoinQueries {
     // Fellegi–Sunter linkage composed with transitive clustering):
     // q264's blocked Jaro–Winkler pair scoring at a tighter 0.9
     // threshold → EXACT connected components (Dedup.
-    // connectedComponents, the min-label fixpoint — a~b, b~c
+    // connectedComponents over ccStar, min-id labels — a~b, b~c
     // clusters {a,b,c} even when a≁c directly) → one canonical
     // (min-name) survivor per entity cluster with its member count.
     // The Spark side iterates to the fixpoint; the oracle replays it

@@ -97,7 +97,7 @@ object LlmQueries {
       lshShared.getOrElse((appId, dir, kind), {
         lshShared.keys.toSeq.foreach {
           case k @ (`appId`, d, _) if d != dir =>
-            lshShared.remove(k).foreach(unpersistCheckpoint)
+            lshShared.remove(k).foreach(graft.ops.Graph.releaseCheckpoint)
           case k @ (app, _, _) if app != appId =>
             lshShared.remove(k) // dead app: blocks died with its context
           case _ => ()
@@ -123,18 +123,6 @@ object LlmQueries {
     shared(s, dir, "cc") {
       Dedup.componentsFromPairs(sharedLshCandidates(s, dir), threshold = 0.5)
     }
-
-  /** Free a localCheckpoint's blocks: the checkpointed RDD sits behind
-    * the LogicalRDD node the checkpoint call returned (Dataset.unpersist
-    * only covers cacheManager entries, not checkpoint persistence).
-    * Best-effort — a lazy checkpoint never materialized has nothing to
-    * free, and failures only delay cleanup to context shutdown. */
-  private def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    try df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    } catch { case _: Throwable => () }
 
   /** Once-per-session setup for q120: persist the LSH band index as a
     * bucketed table (same parameters as the in-session shared pass).
@@ -2053,8 +2041,8 @@ object LlmQueries {
     }),
 
     // EXACT near-dedup keep-set: one representative per CONNECTED
-    // COMPONENT of the candidate graph (iterative min-label
-    // propagation, Dedup.connectedComponents) — the canonical
+    // COMPONENT of the candidate graph (Dedup.connectedComponents,
+    // ccStar's min-id labels) — the canonical
     // semantics q72's one-pass greedy approximates, over the SAME
     // shared candidate pass (no second shingle/signature/band-join).
     // Rows-only by contract like q72 (hash-seed-dependent candidates);

@@ -156,15 +156,45 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("connectedComponents throws (never silently under-merges) when maxIter is too low") {
-    // chain 1-2-3-4-5: min-label needs ~4 rounds to reach the far end
+    // chain 1-2-3-4-5: ccStar needs 2 alternation rounds to star it
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 2).collect()
+      Dedup.connectedComponents(chain, maxIter = 1).collect()
     }
     // and with enough rounds the same graph converges to one component
     val ok = Dedup.connectedComponents(chain, maxIter = 10)
       .select("comp").distinct().as[Long].collect().toSeq
     assert(ok === Seq(1L))
+  }
+
+  test("connectedComponents: a 200-node path converges under the default cap") {
+    // eccentricity 199 — hashmin would need ~199 rounds; ccStar's
+    // O(log n) rounds fit the default cap of 20
+    val path = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(path).as[(Long, Long)].collect()
+    assert(got.length === 200 && got.forall(_._2 == 1L))
+  }
+
+  test("connectedComponents: String ids (the q303/q328 entity-name shape)") {
+    val pairs = Seq(("bolt b", "bolt a"), ("bolt c", "bolt b"),
+      ("nut y", "nut x")).toDF("id_a", "id_b")
+    val comps = Dedup.connectedComponents(pairs)
+      .as[(String, String)].collect().toMap
+    assert(comps === Map(
+      "bolt a" -> "bolt a", "bolt b" -> "bolt a", "bolt c" -> "bolt a",
+      "nut x" -> "nut x", "nut y" -> "nut x"))
+  }
+
+  test("connectedComponents leaves at most one persisted RDD behind") {
+    // ccStar releases each superseded round's checkpoint; only the
+    // one the result reads from stays. Compare RDD-id sets: the
+    // ContextCleaner may drop older persisted RDDs concurrently.
+    val sc = spark.sparkContext
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = sc.getPersistentRDDs.keySet
+    Dedup.connectedComponents(chain).collect()
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    assert(fresh.size <= 1, s"retained ${fresh.size} new persisted RDDs")
   }
 
   test("nearDedupExact keeps one representative per transitive cluster; greedy may differ") {

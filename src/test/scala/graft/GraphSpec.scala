@@ -7,6 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraphSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
+  /** Driver-side union-find reference for ccStar: every vertex of a
+    * pair with distinct ends, labeled with its component's minimum id
+    * (the larger root always attaches under the smaller, so each root
+    * is its set's minimum). */
+  private def minLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs if a != b) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
   test("pageRank: one superstep on a symmetrized star matches hand arithmetic") {
     // 1↔2, 1↔3: deg(1)=2, deg(2)=deg(3)=1, N=3, all in 1e-12 units.
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L)).toDF("src", "dst")
@@ -291,17 +308,16 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
 
   test("ccStar: chains, cycles, stars, isolates-by-absence match the min-label fixpoint") {
     // deep path (the doubling case), a cycle, a star, a 2-clique —
-    // the min-label fixpoint (Dedup.connectedComponents) is the
-    // independent reference implementation
-    val edges = (
+    // the min-label fixpoint computed by a driver-side union-find is
+    // the independent reference
+    val pairs =
       (1L to 19L).map(i => (i, i + 1)) ++          // path 1..20
       Seq((30L, 31L), (31L, 32L), (32L, 30L)) ++   // cycle
       Seq((40L, 41L), (40L, 42L), (40L, 43L)) ++   // star
-      Seq((50L, 51L))).toDF("u", "v")
+      Seq((50L, 51L))
+    val edges = pairs.toDF("u", "v")
     val got = Graph.ccStar(edges).as[(Long, Long)].collect().toMap
-    val ref = graft.ops.Dedup.connectedComponents(
-        edges.select(col("u").as("id_a"), col("v").as("id_b")))
-      .as[(Long, Long)].collect().toMap
+    val ref = minLabels(pairs)
     assert(got === ref)
     // edge rows in either orientation + duplicates change nothing
     val messy = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
@@ -358,13 +374,12 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
 
   test("ccStar is partition-invariant and matches a random-graph reference") {
     val rnd = new scala.util.Random(13)
-    val edges = Seq.fill(150)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }.toDF("u", "v")
+    val pairs = Seq.fill(150)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .filter { case (a, b) => a != b }
+    val edges = pairs.toDF("u", "v")
     val a = Graph.ccStar(edges).as[(Long, Long)].collect().toMap
     val b = Graph.ccStar(edges.repartition(7)).as[(Long, Long)].collect().toMap
-    val ref = graft.ops.Dedup.connectedComponents(
-        edges.select(col("u").as("id_a"), col("v").as("id_b")))
-      .as[(Long, Long)].collect().toMap
+    val ref = minLabels(pairs)
     assert(a === ref && b === ref)
   }
 
