@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
+import scala.util.control.NonFatal
+
 /** Iterative graph algorithms as dataframe loops (the q121 k-means
   * discipline applied to link analysis). Spark has no built-in graph
   * operators; the classic formulation (Page et al. 1999; the Pregel
@@ -427,39 +429,21 @@ object Graph {
     * degree (≥ k). */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    // r22 (VERDICT r21 #5 generalized): the per-round edge COUNT rides
-    // the checkpoint materialization itself (observedCheckpoint) — one
-    // job per round instead of checkpoint + count.
-    var (e, nRow) = observedCheckpoint(
+    // no round cap: every round but the last deletes an edge, so the
+    // peel stops (edge count unchanged, or zero) within |E| rounds
+    val e = fixpoint(
       edges.select(col("u"), col("v"))
         .filter(col("u").isNotNull && col("v").isNotNull),
-      count(lit(1)))
-    var n = nRow.getLong(0)
-    var converged = false
-    while (!converged && n > 0) {
-      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("u"))
-      val (pruned, n2Row) = observedCheckpoint(
+      Seq(count(lit(1))), Int.MaxValue)(
+      (prev, cur) => noneLeft(prev, cur) || unchanged(prev, cur)) {
+      (held, _) =>
+        val e = held.last
+        val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("u"))
         e.join(keep, Seq("u"), "left_semi")
           .join(keep.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
-          .select(col("u"), col("v")),
-        count(lit(1)))
-      val n2 = n2Row.getLong(0)
-      // The superseded round's checkpoint blocks are dead once the new
-      // round has materialized (the observed checkpoint above) —
-      // release them, or block-manager storage grows linearly with
-      // round count (adversarial graphs peel many rounds, e.g. chains
-      // under k=2).
-      // NOTE: Dataset.unpersist would be a no-op here — it only talks
-      // to the CacheManager; a localCheckpoint's blocks belong to the
-      // RDD behind the plan's LogicalRDD leaf (the LlmQueries.lshShared
-      // discipline). The FINAL round's checkpoint stays persisted: the
-      // returned frame reads from it.
-      releaseCheckpoint(e)
-      converged = n2 == n
-      n = n2
-      e = pruned
-    }
+          .select(col("u"), col("v"))
+    }.last
     e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .select(col("u").as("node"), col("deg"))
   }
@@ -498,38 +482,16 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint()
-    // r22 (VERDICT r21 #5 generalized): the frontier count rides each
-    // level's checkpoint job (observedCheckpoint) — one job per level
-    // instead of checkpoint + count.
-    val (d0, n0Row) = observedCheckpoint(
+    val levels = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node"), lit(0L).as("dist")),
-      count(lit(1)))
-    // r21 accumulator restructure (guide §1.2): the distance table
-    // used to re-checkpoint a growing union every level (O(levels²)
-    // copied rows + one extra job per level). Each level is already
-    // checkpointed, so the anti-join reads the LAZY union of the
-    // level checkpoints in place. r22 (VERDICT r21 #1): the returned
-    // frame is ONE eager checkpoint of that union — the level
-    // checkpoints are released once it materializes, so exactly one
-    // output-sized checkpoint outlives the call (the kCore rule).
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](d0)
-    var frontier = d0
-    var level = 0L
-    var n = n0Row.getLong(0)
-    while (level < maxHops && n > 0) {
-      level += 1
-      val dist = levels.reduce(_ unionByName _)
-      val (next, nRow) = observedCheckpoint(
-        frontier.join(e, col("node") === col("src"))
+      Seq(count(lit(1))), maxHops, keepRounds = true)(noneLeft) {
+      (held, level) =>
+        held.last.join(e, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
-          .join(dist, Seq("node"), "left_anti")
-          .select(col("node"), lit(level).as("dist")),
-        count(lit(1)))
-      n = nRow.getLong(0)
-      levels += next
-      frontier = next
+          .join(held.reduce(_ unionByName _), Seq("node"), "left_anti")
+          .select(col("node"), lit(level.toLong).as("dist"))
     }
     releaseCheckpoint(e)
     settle(levels.reduce(_ unionByName _), levels)
@@ -587,42 +549,26 @@ object Graph {
           .cast("long"))
           .otherwise(col("w")).as("w"))
       .localCheckpoint()
-    // fixpoint witness carried across rounds: relaxation is MONOTONE —
-    // nodes are only added and each node's dist only decreases — so
-    // unchanged (count, Σdist) ⇔ nothing moved. One scalar aggregate
-    // per round instead of a shuffle-heavy exceptAll set difference
-    // (the r16 review's finding: the difference roughly doubled
-    // per-round cost for callers whose bound never converges early).
-    // r22 (VERDICT r21 #5): the witness rides the checkpoint
-    // materialization itself (observedCheckpoint) — one job per round
-    // instead of checkpoint + scalar-aggregate scan.
-    def stats(row: org.apache.spark.sql.Row): (Long, Long) =
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    val witness = Seq(count(lit(1)), sum(col("dist")))
-    var (dist, d0Row) = observedCheckpoint(
+    // fixpoint witness: relaxation is MONOTONE — nodes are only added
+    // and each node's dist only decreases — so unchanged (count, Σdist)
+    // ⇔ nothing moved. One scalar aggregate per round instead of a
+    // shuffle-heavy exceptAll set difference (measured in r16: the
+    // difference roughly doubled per-round cost for callers whose
+    // bound never converges early).
+    val dist = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node"), lit(0L).as("dist")),
-      witness: _*)
-    var prev = stats(d0Row)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val relaxed = dist.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"),
-          (col("dist") + col("w")).as("dist"))
-      val (next, nextRow) = observedCheckpoint(
+      Seq(count(lit(1)), sum(col("dist"))), rounds)(unchanged) {
+      (held, _) =>
+        val dist = held.last
+        val relaxed = dist.join(e, col("node") === col("src"))
+          .select(col("dst").as("node"),
+            (col("dist") + col("w")).as("dist"))
         dist.select(col("node"), col("dist"))
           .unionByName(relaxed)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist")),
-        witness: _*)
-      val cur = stats(nextRow)
-      done = cur == prev
-      prev = cur
-      releaseCheckpoint(dist)
-      dist = next
-      r += 1
-    }
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    }.last
     releaseCheckpoint(e)
     dist
   }
@@ -676,37 +622,21 @@ object Graph {
       .groupBy(col("src"), col("dst"))
       .agg(sort_array(collect_list(col("t"))).as("ts"))
       .localCheckpoint()
-    // r22 (VERDICT r21 #5): the (count, Σarr) fixpoint witness rides
-    // the checkpoint job itself (observedCheckpoint) — one job per
-    // round instead of checkpoint + scalar-aggregate scan.
-    def stats(row: org.apache.spark.sql.Row): (Long, Long) =
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    val witness = Seq(count(lit(1)), sum(col("arr")))
-    var (arr, a0Row) = observedCheckpoint(
+    val arr = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node"), lit(startT).as("arr")),
-      witness: _*)
-    var prev = stats(a0Row)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val relaxed = arr.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"),
-          array_min(filter(col("ts"), t => t >= col("arr"))).as("arr"))
-        .filter(col("arr").isNotNull)
-      val (next, nextRow) = observedCheckpoint(
+      Seq(count(lit(1)), sum(col("arr"))), rounds)(unchanged) {
+      (held, _) =>
+        val arr = held.last
+        val relaxed = arr.join(e, col("node") === col("src"))
+          .select(col("dst").as("node"),
+            array_min(filter(col("ts"), t => t >= col("arr"))).as("arr"))
+          .filter(col("arr").isNotNull)
         arr.select(col("node"), col("arr"))
           .unionByName(relaxed)
-          .groupBy(col("node")).agg(min(col("arr")).as("arr")),
-        witness: _*)
-      val cur = stats(nextRow)
-      done = cur == prev
-      prev = cur
-      releaseCheckpoint(arr)
-      arr = next
-      r += 1
-    }
+          .groupBy(col("node")).agg(min(col("arr")).as("arr"))
+    }.last
     releaseCheckpoint(e)
     arr
   }
@@ -744,37 +674,21 @@ object Graph {
       .groupBy(col("src"), col("dst"))
       .agg(sort_array(collect_list(col("t"))).as("ts"))
       .localCheckpoint()
-    // r22 (VERDICT r21 #5): the (count, Σld) fixpoint witness rides
-    // the checkpoint job itself (observedCheckpoint) — one job per
-    // round instead of checkpoint + scalar-aggregate scan.
-    def stats(row: org.apache.spark.sql.Row): (Long, Long) =
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    val witness = Seq(count(lit(1)), sum(col("ld")))
-    var (ld, l0Row) = observedCheckpoint(
+    val ld = fixpoint(
       targets.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node"), lit(deadline).as("ld")),
-      witness: _*)
-    var prev = stats(l0Row)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val relaxed = ld.join(e, col("node") === col("dst"))
-        .select(col("src").as("node"),
-          array_max(filter(col("ts"), t => t <= col("ld"))).as("ld"))
-        .filter(col("ld").isNotNull)
-      val (next, nextRow) = observedCheckpoint(
+      Seq(count(lit(1)), sum(col("ld"))), rounds)(unchanged) {
+      (held, _) =>
+        val ld = held.last
+        val relaxed = ld.join(e, col("node") === col("dst"))
+          .select(col("src").as("node"),
+            array_max(filter(col("ts"), t => t <= col("ld"))).as("ld"))
+          .filter(col("ld").isNotNull)
         ld.select(col("node"), col("ld"))
           .unionByName(relaxed)
-          .groupBy(col("node")).agg(max(col("ld")).as("ld")),
-        witness: _*)
-      val cur = stats(nextRow)
-      done = cur == prev
-      prev = cur
-      releaseCheckpoint(ld)
-      ld = next
-      r += 1
-    }
+          .groupBy(col("node")).agg(max(col("ld")).as("ld"))
+    }.last
     releaseCheckpoint(e)
     ld
   }
@@ -834,38 +748,22 @@ object Graph {
       .localCheckpoint()
     val sd = seeds.select(col("node")).filter(col("node").isNotNull)
       .distinct()
-    // r22 (VERDICT r21 #5): the (count, Σarr) fixpoint witness rides
-    // the checkpoint job itself (observedCheckpoint) — one job per
-    // round instead of checkpoint + scalar-aggregate scan.
-    def stats(row: org.apache.spark.sql.Row): (Long, Long) =
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    val witness = Seq(count(lit(1)), sum(col("arr")))
-    var (f, f0Row) = observedCheckpoint(
+    val f = fixpoint(
       raw.join(sd, raw("src") === sd("node"))
         .select(col("node"), col("t").as("dep"), col("t").as("arr"))
         .distinct(),
-      witness: _*)
-    releaseCheckpoint(raw)
-    var prev = stats(f0Row)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val relaxed = f.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), col("dep"),
-          array_min(filter(col("ts"), t => t >= col("arr"))).as("arr"))
-        .filter(col("arr").isNotNull)
-      val (next, nextRow) = observedCheckpoint(
+      Seq(count(lit(1)), sum(col("arr"))), rounds)(unchanged) {
+      (held, _) =>
+        val f = held.last
+        val relaxed = f.join(e, col("node") === col("src"))
+          .select(col("dst").as("node"), col("dep"),
+            array_min(filter(col("ts"), t => t >= col("arr"))).as("arr"))
+          .filter(col("arr").isNotNull)
         f.select(col("node"), col("dep"), col("arr"))
           .unionByName(relaxed)
-          .groupBy(col("node"), col("dep")).agg(min(col("arr")).as("arr")),
-        witness: _*)
-      val cur = stats(nextRow)
-      done = cur == prev
-      prev = cur
-      releaseCheckpoint(f)
-      f = next
-      r += 1
-    }
+          .groupBy(col("node"), col("dep")).agg(min(col("arr")).as("arr"))
+    }.last
+    releaseCheckpoint(raw)
     releaseCheckpoint(e)
     // duration-minimal journey per node, deterministic tie-break —
     // a min-struct aggregate (the r18 louvainMove selection idiom)
@@ -914,38 +812,22 @@ object Graph {
       .groupBy(col("src"), col("dst"))
       .agg(sort_array(collect_list(col("t"))).as("ts"))
       .localCheckpoint()
-    // r22 (VERDICT r21 #5): the (count, Σarr) fixpoint witness rides
-    // the checkpoint job itself (observedCheckpoint) — one job per
-    // round instead of checkpoint + scalar-aggregate scan.
-    def stats(row: org.apache.spark.sql.Row): (Long, Long) =
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    val witness = Seq(count(lit(1)), sum(col("arr")))
-    var (f, f0Row) = observedCheckpoint(
+    val f = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node"), lit(0L).as("hops"), lit(startT).as("arr")),
-      witness: _*)
-    var prev = stats(f0Row)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
-      val relaxed = f.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(r.toLong).as("hops"),
-          array_min(filter(col("ts"), t => t >= col("arr"))).as("arr"))
-        .filter(col("arr").isNotNull)
-      val (next, nextRow) = observedCheckpoint(
+      Seq(count(lit(1)), sum(col("arr"))), rounds)(unchanged) {
+      (held, r) =>
+        val f = held.last
+        val relaxed = f.join(e, col("node") === col("src"))
+          .select(col("dst").as("node"), lit(r.toLong).as("hops"),
+            array_min(filter(col("ts"), t => t >= col("arr"))).as("arr"))
+          .filter(col("arr").isNotNull)
         f.select(col("node"), col("hops"), col("arr"))
           .unionByName(relaxed)
           .groupBy(col("node"))
-          .agg(min(col("hops")).as("hops"), min(col("arr")).as("arr")),
-        witness: _*)
-      val cur = stats(nextRow)
-      done = cur == prev
-      prev = cur
-      releaseCheckpoint(f)
-      f = next
-    }
+          .agg(min(col("hops")).as("hops"), min(col("arr")).as("arr"))
+    }.last
     releaseCheckpoint(e)
     f
   }
@@ -1005,32 +887,16 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint()
-    // r22 (VERDICT r21 #5 generalized): the frontier-nonempty witness
-    // rides each level's checkpoint job (observedCheckpoint) — one job
-    // per level instead of checkpoint + head(1) probe.
-    val (f0, f0Row) = observedCheckpoint(
+    val levels = fixpoint(
       sources.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node").as("s"), col("node"), lit(1L).as("sig")),
-      count(lit(1)))
-    // r21 accumulator restructure (guide §1.2, the harmonicCentrality
-    // comment): the forward settled set is a LAZY union of the level
-    // checkpoints (no per-round growing re-checkpoint), and the
-    // backward δ accumulator collects the per-level checkpointed
-    // frames and aggregates ONCE at the end (integer sum —
-    // associative). r22 (VERDICT r21 #1): the final aggregate is
-    // eager-checkpointed and every surviving level/δ checkpoint
-    // released — one node-sized checkpoint outlives the call.
-    val levels = scala.collection.mutable.ArrayBuffer(f0)
-    var frontier = f0
-    var n = f0Row.getLong(0)
-    var d = 0
-    while (d < maxHops && n > 0) {
-      val settled = levels
-        .map(_.select(col("s"), col("node")))
-        .reduce(_ unionByName _)
-      val (nxt, nxtRow) = observedCheckpoint(
-        frontier.join(e, col("node") === col("src"))
+      Seq(count(lit(1))), maxHops, keepRounds = true)(noneLeft) {
+      (held, _) =>
+        val settled = held
+          .map(_.select(col("s"), col("node")))
+          .reduce(_ unionByName _)
+        held.last.join(e, col("node") === col("src"))
           .groupBy(col("s"), col("dst"))
           .agg(sum(col("sig")).as("sig"))
           .select(col("s"), col("dst").as("node"),
@@ -1039,14 +905,12 @@ object Graph {
                 "bound - widen the quantization before trusting this " +
                 "graph)")).cast("long"))
               .otherwise(col("sig")).as("sig"))
-          .join(settled, Seq("s", "node"), "left_anti"),
-        count(lit(1)))
-      levels += nxt
-      frontier = nxt
-      n = nxtRow.getLong(0)
-      d += 1
+          .join(settled, Seq("s", "node"), "left_anti")
     }
     // backward: δ over the implicit shortest-path DAG, deepest first.
+    // The δ accumulator collects the per-level checkpointed frames and
+    // aggregates ONCE at the end (integer sum — associative); settle
+    // keeps one node-sized checkpoint of that aggregate.
     // The deepest recorded level has no deeper successors → δ = 0.
     var deeper = levels.last
       .select(col("s"), col("node"), col("sig"), lit(0L).as("dl"))
@@ -1169,13 +1033,15 @@ object Graph {
     * so the read-off labels are unchanged. GraphSpec pins witness ⇔
     * FIXPOINT (ccRound(next) set-equals next) at every round on
     * adversarial shapes (cycle, star, 200-path, mixed). */
-  private[graft] def ccIsStarForest(e: DataFrame): Boolean = {
+  private[graft] def ccIsStarForest(e: DataFrame): Boolean =
+    ccJoin(e).filter(ccViolation).isEmpty
+  /** J(e) = sym(e) ⋈ mins(sym(e)): rows (u, v, m), m = min(Γ(u) ∪ {u}). */
+  private def ccJoin(e: DataFrame): DataFrame = {
     val nbrs = ccSym(e)
     nbrs.join(ccMins(nbrs), Seq("u"))
-      .filter((col("v") > col("u") && col("m") =!= col("u")) ||
-        (col("v") < col("u") && col("m") =!= col("v")))
-      .isEmpty
   }
+  private val ccViolation = (col("v") > col("u") && col("m") =!= col("u")) ||
+    (col("v") < col("u") && col("m") =!= col("v"))
   def ccStar(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     // r22 (VERDICT r21 #3): the per-round checkpoint is now
     // J(e) = sym(e) ⋈ mins(sym(e)) — rows (u, v, m) — instead of the
@@ -1184,7 +1050,7 @@ object Graph {
     //   - the star-forest WITNESS is J's row-local violation filter
     //     (ccIsStarForest used to re-derive sym+mins+join as a second
     //     shuffle job per round); it now rides the checkpoint
-    //     materialization as an observe() metric — one job per round;
+    //     materialization as the fixpoint witness;
     //   - the next round's LARGE-STAR step is J.filter(v > u) with its
     //     sym+mins already inside J (one min-groupBy + join per round
     //     deleted);
@@ -1196,32 +1062,17 @@ object Graph {
     // round 1 the identity (Kiveris et al. Thm 2 — fixpoints are
     // exactly the min-rooted star forests), so the 0-round exit reads
     // identical labels.
-    val violation = (col("v") > col("u") && col("m") =!= col("u")) ||
-      (col("v") < col("u") && col("m") =!= col("v"))
-    def joined(e: DataFrame): (DataFrame, Boolean) = {
-      val nbrs = ccSym(e)
-      val (j, row) = observedCheckpoint(nbrs.join(ccMins(nbrs), Seq("u")),
-        count(when(violation, 1L)).as("viol"))
-      (j, row.getLong(0) == 0L)
-    }
-    var (j, done) = joined(ccCanon(pairs.select(col("u"), col("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)))
-    var rounds = 0
-    while (!done && rounds < maxRounds) {
-      val large = j.filter(col("v") > col("u"))
+    val j = fixpoint(
+      ccJoin(ccCanon(pairs.select(col("u"), col("v"))
+        .filter(col("u").isNotNull && col("v").isNotNull))),
+      Seq(count(when(ccViolation, 1L)).as("viol")), maxRounds,
+      capError = Some(
+        s"ccStar did not converge within $maxRounds alternation rounds"))(
+      noneLeft) { (held, _) =>
+      val large = held.last.filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-      val (jn, d) = joined(ccCanon(ccStarStep(large, large = false)))
-      releaseCheckpoint(j)
-      j = jn
-      done = d
-      rounds += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"ccStar did not converge within $maxRounds alternation rounds")
-    // The FINAL round's checkpoint stays persisted: the returned
-    // frame reads from it (the kCore lineage discipline — releasing
-    // it here truncates lineage and every later execution dies with
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+      ccJoin(ccCanon(ccStarStep(large, large = false)))
+    }.last
     j.select(col("u").as("node"), col("m").as("comp")).distinct()
   }
 
@@ -1550,58 +1401,40 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint()
-    // r22 (VERDICT r21 #5 generalized): the frontier-nonempty witness
-    // rides each level's checkpoint job (observedCheckpoint) — one job
-    // per level instead of checkpoint + head(1) probe.
-    val (f0, f0Row) = observedCheckpoint(
-      sources.select(col("node")).filter(col("node").isNotNull)
-        .distinct()
-        .select(col("node").as("s"), col("node")),
-      count(lit(1)))
-    // r21 accumulator restructure (guide §1.2 — fewer passes): the
-    // settled set and the hc partial sums used to re-checkpoint a
-    // GROWING union every round (O(rounds²) copied rows plus two
-    // materialization jobs per round). Every per-round frontier is
-    // already checkpointed, so both accumulators are now LAZY unions
-    // over those checkpoints: the anti-join reads them in place, and
-    // the harmonic sum aggregates ONCE at the end (integer sum —
-    // associative, so the merged-per-round and summed-once results
-    // are identical). r22 (VERDICT r21 #1): the final sum is
-    // eager-checkpointed and the level checkpoints released — one
-    // node-sized checkpoint outlives the call.
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](f0)
-    val contribs = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = f0
-    var n = f0Row.getLong(0)
-    var d = 0
-    while (d < maxHops && n > 0) {
-      d += 1
-      val settled = levels.reduce(_ unionByName _)
-      val (nxt, nxtRow) = observedCheckpoint(
-        frontier.join(e, col("node") === col("src"))
-          .select(col("s"), col("dst").as("node"))
-          .distinct()
-          .join(settled, Seq("s", "node"), "left_anti"),
-        count(lit(1)))
-      levels += nxt
-      frontier = nxt
-      n = nxtRow.getLong(0)
-      contribs += nxt.groupBy(col("node"))
-        .agg((count(lit(1)) * lit(scale / d)).as("hc"))
-    }
+    val levels = sourceLevels(e, sources, maxHops)
     releaseCheckpoint(e)
-    if (contribs.isEmpty) {
-      releaseCheckpoint(f0)
-      // no source had any out-edge: empty (node, hc_scaled) frame
+    if (levels.size == 1) {
+      releaseCheckpoint(levels.head)
+      // no source at all: empty (node, hc_scaled) frame
       emptyResult(edges, edges.schema("src").dataType, "hc_scaled")
     } else {
-      // levels(0) = f0 is released by settle with the rest
+      // the harmonic sum aggregates ONCE over the level-d frames
+      // (integer sum — associative)
+      val contribs = (1 until levels.size).map(d => levels(d)
+        .groupBy(col("node")).agg((count(lit(1)) * lit(scale / d)).as("hc")))
       settle(contribs.reduce(_ unionByName _)
         .groupBy(col("node")).agg(sum(col("hc")).as("hc"))
         .filter(col("hc") > 0)
         .select(col("node"), col("hc").as("hc_scaled")), levels)
     }
   }
+
+  /** The `bfs` kernel vectorized over sources: level d holds the
+    * (s, node) pairs first reached from source s at d hops, level 0 the
+    * sources themselves. Every level is held (the caller settles them). */
+  private def sourceLevels(e: DataFrame, sources: DataFrame,
+                           maxHops: Int): Vector[DataFrame] =
+    fixpoint(
+      sources.select(col("node")).filter(col("node").isNotNull)
+        .distinct()
+        .select(col("node").as("s"), col("node")),
+      Seq(count(lit(1))), maxHops, keepRounds = true)(noneLeft) {
+      (held, _) =>
+        held.last.join(e, col("node") === col("src"))
+          .select(col("s"), col("dst").as("node"))
+          .distinct()
+          .join(held.reduce(_ unionByName _), Seq("s", "node"), "left_anti")
+    }
 
   /** SAMPLED ECCENTRICITY and the diameter lower bound it carries
     * (Magnien, Latapy & Habib 2009, "Fast computation of empirically
@@ -1641,50 +1474,20 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint()
-    // r22 (VERDICT r21 #5 generalized): the frontier-nonempty witness
-    // rides each level's checkpoint job (observedCheckpoint) — one job
-    // per level instead of checkpoint + head(1) probe.
-    val (f0, f0Row) = observedCheckpoint(
-      sources.select(col("node")).filter(col("node").isNotNull)
-        .distinct()
-        .select(col("node").as("s"), col("node")),
-      count(lit(1)))
-    // r21 accumulator restructure (guide §1.2, the harmonicCentrality
-    // comment): settled = lazy union of the per-round checkpoints for
-    // the anti-join; the per-source (ecc, n_reached) stats union once
-    // at the END into one max/sum aggregate (both associative, so the
-    // merged-per-round and aggregated-once results are identical).
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](f0)
-    val lvls = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = f0
-    var n = f0Row.getLong(0)
-    var d = 0
-    while (d < maxHops && n > 0) {
-      d += 1
-      val settled = levels.reduce(_ unionByName _)
-      val (nxt, nxtRow) = observedCheckpoint(
-        frontier.join(e, col("node") === col("src"))
-          .select(col("s"), col("dst").as("node"))
-          .distinct()
-          .join(settled, Seq("s", "node"), "left_anti"),
-        count(lit(1)))
-      levels += nxt
-      frontier = nxt
-      n = nxtRow.getLong(0)
-      lvls += nxt.groupBy(col("s"))
-        .agg(lit(d.toLong).as("ecc"), count(lit(1)).as("n_reached"))
-    }
+    val levels = sourceLevels(e, sources, maxHops)
     // a source is exact iff its frontier died before the bound: no
     // (s, ·) row survives in the FINAL frontier.
-    val unfinished = frontier.select(col("s")).distinct()
+    val unfinished = levels.last.select(col("s")).distinct()
     releaseCheckpoint(e)
-    if (lvls.isEmpty) {
-      releaseCheckpoint(f0)
+    if (levels.size == 1) {
+      releaseCheckpoint(levels.head)
       emptyResult(edges, edges.schema("src").dataType,
         "ecc", "n_reached", "is_exact")
     } else {
-      // levels (incl. f0 and the last frontier `unfinished` reads)
-      // are released once the final aggregate checkpoints
+      // the per-source (ecc, n_reached) stats of the level-d frames
+      // union once into one max/sum aggregate (both associative)
+      val lvls = (1 until levels.size).map(d => levels(d).groupBy(col("s"))
+        .agg(lit(d.toLong).as("ecc"), count(lit(1)).as("n_reached")))
       settle(lvls.reduce(_ unionByName _).groupBy(col("s"))
         .agg(max(col("ecc")).as("ecc"),
           sum(col("n_reached")).as("n_reached"))
@@ -1787,8 +1590,8 @@ object Graph {
       .distinct()
       .select(col("node"), lit(scale).as("v"))
       .localCheckpoint()
-    // r21 accumulator restructure (guide §1.2, the harmonicCentrality
-    // comment): the cross-level accumulator used to re-checkpoint a
+    // r21 accumulator restructure (guide §1.2): the cross-level
+    // accumulator used to re-checkpoint a
     // growing union + re-aggregate EVERY level; each level's vector is
     // already checkpointed for the next superstep, so the Σ_k v_k sum
     // now aggregates ONCE at the end over the lazy union of the level
@@ -2000,29 +1803,18 @@ object Graph {
         col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint()
-    // r22 (VERDICT r21 #5 generalized): the live-set-nonempty witness
-    // rides each round's shrink-checkpoint job (observedCheckpoint) —
-    // one job fewer per round than checkpoint + head(1) probe.
-    var (live, liveRow) = observedCheckpoint(
+    // The live set already excludes every PRIOR round's decided nodes,
+    // so the shrink anti-join only needs THIS round's joiners ∪
+    // removed — the decided set is assembled once at the end as the
+    // union of the per-round checkpoints.
+    val pieces = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val live = fixpoint(
       e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node")))
         .distinct()
         .select(col("node"), prio.as("p")),
-      count(lit(1)))
-    var nLive = liveRow.getLong(0)
-    // r21 accumulator restructure (guide §1.2, the harmonicCentrality
-    // comment): the decided set used to re-checkpoint a growing union
-    // every round. The live set already excludes every PRIOR round's
-    // decided nodes, so the shrink anti-join only needs THIS round's
-    // joiners ∪ removed — the cross-round accumulator is assembled
-    // once at the end as the lazy union of the per-round checkpoints.
-    // r22 (VERDICT r21 #1): that union is eager-checkpointed and the
-    // per-round checkpoints released — one node-sized checkpoint
-    // outlives the call.
-    val pieces = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var i = 0
-    while (i < rounds && nLive > 0) {
-      i += 1
+      Seq(count(lit(1))), rounds)(noneLeft) { (held, i) =>
+      val live = held.last
       // neighbor minimum over LIVE neighbors only
       val nbrMin = live.join(e, col("node") === col("src"))
         .select(col("dst").as("node"), col("p"))
@@ -2033,6 +1825,7 @@ object Graph {
         .select(col("node"), lit("mis").as("status"),
           lit(i.toLong).as("round"))
         .localCheckpoint()
+      pieces += joiners
       // a joiner is never adjacent to a joiner (the smaller priority
       // would have blocked the other), so removed ∩ joiners = ∅ by
       // construction — no anti-join needed
@@ -2043,17 +1836,11 @@ object Graph {
         .select(col("node"), lit("removed").as("status"),
           lit(i.toLong).as("round"))
         .localCheckpoint()
-      val (shrunk, shrunkRow) = observedCheckpoint(
-        live.join(joiners.select(col("node"))
-          .unionByName(removed.select(col("node"))),
-          Seq("node"), "left_anti"),
-        count(lit(1)))
-      releaseCheckpoint(live)
-      pieces += joiners
       pieces += removed
-      live = shrunk
-      nLive = shrunkRow.getLong(0)
-    }
+      live.join(joiners.select(col("node"))
+        .unionByName(removed.select(col("node"))),
+        Seq("node"), "left_anti")
+    }.last
     releaseCheckpoint(e)
     settle((pieces :+ live.select(col("node"), lit("live").as("status"),
       lit(0L).as("round")))
@@ -2104,37 +1891,18 @@ object Graph {
       .localCheckpoint()
     val nCounts = nbrs.groupBy(col("cand"))
       .agg(count(lit(1)).as("n_neighbors"))
-    // r22 (VERDICT r21 #5 generalized): the frontier-nonempty witness
-    // rides each level's checkpoint job (observedCheckpoint) — one job
-    // per level instead of checkpoint + head(1) probe.
-    val (f0, f0Row) = observedCheckpoint(
+    val levels = fixpoint(
       nbrs.groupBy(col("cand")).agg(min(col("nbr")).as("node")),
-      count(lit(1)))
-    // r21 accumulator restructure (guide §1.2, the harmonicCentrality
-    // comment): settled = lazy union of the per-round checkpoints —
-    // no growing re-checkpoint per round. r22 (VERDICT r21 #1): the
-    // final verdict frame is eager-checkpointed and the level + nbrs
-    // checkpoints released — one |C|-sized checkpoint outlives the
-    // call.
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](f0)
-    var frontier = f0
-    var n = f0Row.getLong(0)
-    var d = 0
-    while (d < maxHops && n > 0) {
-      d += 1
-      val settled = levels.reduce(_ unionByName _)
-      val (nxt, nxtRow) = observedCheckpoint(
-        frontier.join(e, col("node") === col("src"))
+      Seq(count(lit(1))), maxHops, keepRounds = true)(noneLeft) {
+      (held, _) =>
+        held.last.join(e, col("node") === col("src"))
           .filter(col("dst") =!= col("cand") && col("src") =!= col("cand"))
           .select(col("cand"), col("dst").as("node"))
           .distinct()
-          .join(settled, Seq("cand", "node"), "left_anti"),
-        count(lit(1)))
-      levels += nxt
-      frontier = nxt
-      n = nxtRow.getLong(0)
+          .join(held.reduce(_ unionByName _), Seq("cand", "node"),
+            "left_anti")
     }
-    val unfinished = frontier.select(col("cand")).distinct()
+    val unfinished = levels.last.select(col("cand")).distinct()
       .withColumn("unf", lit(1L))
     val reached = nbrs
       .join(levels.reduce(_ unionByName _)
@@ -2251,6 +2019,63 @@ object Graph {
     out
   }
 
+  /** THE FIXPOINT LOOP: every witness-stopped iterative op runs its
+    * rounds here (Pregel-style supersteps, Malewicz et al. 2010). The
+    * caller supplies the round-0 state, the witness aggregates, a round
+    * cap, a stop rule and a step; `fixpoint` owns everything between:
+    *
+    *  - ONE job per round: `init` and each step's output are eagerly
+    *    localCheckpointed with the witness observed on that same job
+    *    (`observedCheckpoint`), so the stop test never scans the state
+    *    again;
+    *  - the stop test: `stop(prev, cur)` runs on round 0's witness
+    *    (prev = None) and after every round. Callers pick `unchanged`
+    *    (monotone relaxations: nodes only added, values only move one
+    *    way, so an equal witness row is a fixpoint), `noneLeft` (the
+    *    first witness column is 0: an empty frontier or live set, no
+    *    star-forest violations), or a combination;
+    *  - the round cap: at most `maxRounds` steps. Reaching the cap
+    *    without the stop test firing returns the state reached (the
+    *    bounded-hop/bounded-round ops), or throws
+    *    IllegalStateException(`capError`) when one is given;
+    *  - retention: by default each superseded round's checkpoint is
+    *    released as soon as the next one has materialized, so exactly
+    *    the final round's checkpoint outlives the call (the returned
+    *    frame reads from it). With `keepRounds` every round is held:
+    *    level-synchronous traversals anti-join against the union of
+    *    their levels and read them all after the loop; they release
+    *    them through `settle`.
+    *
+    * `step(held, r)` builds round r (1-based) from the held rounds —
+    * all of them with `keepRounds`, else only the current state;
+    * `held.last` is always the latest round. Returns the held rounds. */
+  private def fixpoint(init: DataFrame, witness: Seq[Column], maxRounds: Int,
+                       keepRounds: Boolean = false,
+                       capError: Option[String] = None)(
+                       stop: (Option[Row], Row) => Boolean)(
+                       step: (Vector[DataFrame], Int) => DataFrame)
+      : Vector[DataFrame] = {
+    val (s0, w0) = observedCheckpoint(init, witness: _*)
+    var held = Vector(s0)
+    var prev = w0
+    var done = stop(None, w0)
+    var r = 0
+    while (!done && r < maxRounds) {
+      r += 1
+      val (next, w) = observedCheckpoint(step(held, r), witness: _*)
+      done = stop(Some(prev), w)
+      prev = w
+      if (keepRounds) held :+= next
+      else { releaseCheckpoint(held.last); held = Vector(next) }
+    }
+    if (!done) capError.foreach(msg => throw new IllegalStateException(msg))
+    held
+  }
+  private val unchanged: (Option[Row], Row) => Boolean =
+    (prev, cur) => prev.contains(cur)
+  private val noneLeft: (Option[Row], Row) => Boolean =
+    (_, cur) => cur.getLong(0) == 0L
+
   /** Bound an iterative op's retained storage (VERDICT r21 #1): take
     * ONE eager localCheckpoint of the final reduced frame — a single
     * output-sized copy — then release every per-round level checkpoint
@@ -2304,5 +2129,5 @@ object Graph {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false); ()
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 }

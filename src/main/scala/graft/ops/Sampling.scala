@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Sampling and dataset-splitting operators for training-data
   * pipelines: deterministic content-hash splits (train/eval membership
   * must be a pure function of the example, never of row order,
@@ -407,7 +409,7 @@ object Sampling {
     var rdd = trackedCheckpoints.poll()
     while (rdd != null) {
       try rdd.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       rdd = trackedCheckpoints.poll()
     }
   }

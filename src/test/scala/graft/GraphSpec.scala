@@ -1276,5 +1276,40 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       Graph.articulation(edges, Seq(2L, 3L).toDF("node"), maxHops = 10))
     retainedAfter("deterministicWalks")(
       Graph.deterministicWalks(edges, length = 5))
+    retainedAfter("sssp")(
+      Graph.sssp(edges.withColumn("w", lit(2L)), seeds, rounds = 10))
+    val dated = edges.withColumn("t", col("src") + col("dst"))
+    retainedAfter("earliestArrival")(
+      Graph.earliestArrival(dated, seeds, startT = 0L, rounds = 10))
+    retainedAfter("latestDeparture")(
+      Graph.latestDeparture(dated, Seq(6L).toDF("node"), deadline = 100L,
+        rounds = 10))
+    retainedAfter("fastestJourney")(
+      Graph.fastestJourney(dated, seeds, rounds = 10))
+    retainedAfter("shortestJourney")(
+      Graph.shortestJourney(dated, seeds, startT = 0L, rounds = 10))
+    val undirected = edges.select(col("src").as("u"), col("dst").as("v"))
+    retainedAfter("kCore")(Graph.kCore(undirected, k = 2))
+    retainedAfter("ccStar")(Graph.ccStar(undirected))
+  }
+
+  test("bfs, sssp and ccStar build with a pinned number of Spark jobs") {
+    // one checkpoint job per round (the witness rides it): an extra
+    // job per round or per call moves these counts. Fixtures are the
+    // hand-checked bfs, sssp and ccStar inputs above.
+    val paths = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L),
+      (9L, 10L)).toDF("src", "dst")
+    val diamond = Seq(
+      (1L, 2L, 1L), (2L, 4L, 1L), (1L, 4L, 5L), (1L, 3L, 10L),
+      (5L, 6L, 1L)).toDF("src", "dst", "w")
+    val pairs = ((1L to 19L).map(i => (i, i + 1)) ++
+      Seq((30L, 31L), (31L, 32L), (32L, 30L)) ++
+      Seq((40L, 41L), (40L, 42L), (40L, 43L)) ++
+      Seq((50L, 51L))).toDF("u", "v")
+    val seed = Seq(1L).toDF("node")
+    val (_, bfsJobs) = jobsIn(Graph.bfs(paths, seed, maxHops = 10))
+    val (_, ssspJobs) = jobsIn(Graph.sssp(diamond, seed, rounds = 4))
+    val (_, ccJobs) = jobsIn(Graph.ccStar(pairs))
+    assert((bfsJobs, ssspJobs, ccJobs) === ((22, 11, 35)))
   }
 }

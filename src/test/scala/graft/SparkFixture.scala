@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole ScalaTest run (suites execute
@@ -57,5 +60,30 @@ trait SparkFixture {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** Spark jobs `body` starts, counted by a listener on a job group.
+    * Listener delivery is asynchronous but ordered, so a marker job
+    * run afterwards flushes every earlier job start to the listener. */
+  def jobsIn[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-jobs-body", "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft-jobs-marker", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("graft-jobs-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("graft-jobs-marker"), "listener never saw the marker job")
+      (out, groups.toArray.count(_ == "graft-jobs-body"))
+    } finally sc.removeSparkListener(listener)
   }
 }
