@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // sampled FIRST — the load the run LAUNCHED into, before this
@@ -8,44 +7,12 @@ object Bench {
     val launchLoad1m = try scala.io.Source.fromFile("/proc/loadavg")
       .mkString.split("\\s+")(0).toDouble catch { case _: Throwable => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples partition count from
-    // thread count for above-sf0.1 corpora (the ScaleProbe q171 spill
-    // remedy: partitions ∝ data). When explicitly set, AQE partition
-    // coalescing is pinned OFF — else advisory sizing folds the
-    // override back toward cpus and the run measures nothing.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        (!sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")).toString)
-      // same timezone as the correctness-gated Verify config — the
-      // benched plans for q40/q60-q62 must be the verified plans.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed tables (q96 bucketed setup) go to a self-cleaning temp
-      // dir, never a spark-warehouse/ in the process cwd. NOTE: q96's
-      // bench time includes the ONE-TIME bucketed write (by design —
-      // the "shuffle paid at write time" cost is real and should be
-      // visible once).
-      .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct, graft.expressions.RewriteRollingHash)
-    // SPARK_GRAFT_NO_TOPK_REWRITE=1 benches the window path instead —
-    // the A/B toggle behind the BASELINE.md grouped-top-k numbers.
-    // Only "1" disables: a bare contains() check would let =0 or an
-    // empty export silently record a misattributed window-path baseline.
-    if (!sys.env.get("SPARK_GRAFT_NO_TOPK_REWRITE").contains("1")) {
-      spark.experimental.extraOptimizations ++= Seq(graft.plans.RewriteGroupedTopK)
-      spark.experimental.extraStrategies ++= Seq(graft.plans.GroupedTopKStrategy)
-    }
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.RewriteAggOnRollup)
-    spark.sparkContext.setLogLevel("WARN")
+    // same session as Verify (GraftSession): the benched plans are the
+    // verified plans. NOTE: q96's bench time includes the ONE-TIME
+    // bucketed write into the session's scratch warehouse (by design —
+    // the "shuffle paid at write time" cost is real and should be
+    // visible once).
+    val spark = GraftSession.fromEnv()
     // Untimed warmup: one trivial job + the flagship query spins up the
     // executor pool, whole-stage codegen compiler, and parquet reader
     // paths so the first TIMED query doesn't absorb multi-second JVM
@@ -77,9 +44,9 @@ object Bench {
       .filter { case (name, _) =>
         only.forall(f => f.exists(name.startsWith))
       }
-    // SPARK_GRAFT_METRICS=1 adds per-query shuffle-read and spill MB
-    // (disk and memory separately — the r14 ScaleProbe lesson) to the
-    // JSON under "metrics". Listener totals are process-wide per query
+    // SPARK_GRAFT_METRICS=1 adds per-query shuffle read/write and spill
+    // MB (disk and memory separately, see MetricsAcc) to the JSON under
+    // "metrics". Listener totals are process-wide per query
     // (the bench runs serially, nothing else in flight).
     val acc = if (sys.env.get("SPARK_GRAFT_METRICS").contains("1")) {
       val a = new MetricsAcc
@@ -124,6 +91,7 @@ object Bench {
           System.err.println(s"BENCH: metrics drain timed out for $name")
         if (ok)
           metricRows += s""""$name":{"shuffle_read_mb":${a.shufRead.get / 1e6},""" +
+            s""""shuffle_write_mb":${a.shufWrite.get / 1e6},""" +
             s""""disk_spill_mb":${a.diskSpill.get / 1e6},""" +
             s""""mem_spill_mb":${a.memSpill.get / 1e6},""" +
             s""""drain_timeout":${!drained},""" +

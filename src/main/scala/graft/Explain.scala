@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of one query (or
   * all) so shuffle/pushdown/broadcast shape can be reviewed without a
   * notebook. Usage: runMain graft.Explain <sfDir> [name1,name2,...]. */
@@ -9,19 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct, graft.expressions.RewriteRollingHash, graft.plans.RewriteGroupedTopK)
-    spark.experimental.extraStrategies ++= Seq(graft.plans.GroupedTopKStrategy)
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))) {

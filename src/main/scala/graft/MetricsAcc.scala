@@ -2,18 +2,15 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 
-/** Shared task-metrics listener for the measurement harnesses (Bench
-  * metrics mode, GraphBucketProbe, ScaleProbe, ClusterScaleProbe) —
-  * previously four near-identical copies tracking different metric
-  * subsets, which made "spill" mean different things across SCALE.md
-  * rows. Disk and memory spill are tracked SEPARATELY everywhere now:
-  * memoryBytesSpilled is the deserialized in-memory size at spill
-  * time, routinely several × the bytes that reach disk (the r14
-  * ScaleProbe lesson — summing them overstated spill ~5×).
+/** Task-metrics listener behind Bench's `SPARK_GRAFT_METRICS=1` rows:
+  * shuffle read and write bytes, and disk and memory spill tracked
+  * SEPARATELY. memoryBytesSpilled is the deserialized in-memory size at
+  * spill time, routinely several × the bytes that reach disk (the r14
+  * lesson — summing them overstated spill ~5×).
   *
-  * Totals are process-wide per measured span; every harness runs its
-  * queries serially with nothing else in flight, and drains straggler
-  * task-end events (a short sleep) before reading the counters. */
+  * Totals are process-wide per measured span: Bench runs its queries
+  * serially with nothing else in flight, and `drain()`s straggler
+  * task-end events before reading the counters. */
 final class MetricsAcc extends SparkListener {
   val shufRead = new java.util.concurrent.atomic.AtomicLong
   val shufWrite = new java.util.concurrent.atomic.AtomicLong

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query iteration main: runs one `SparkEntry.queries` entry and
   * prints its row count + head rows. Usage:
   * runMain graft.Show <queryName> [sfDir] [nRows]. */
@@ -11,18 +9,7 @@ object Show {
       sys.error("usage: Show <queryName> [sfDir] [nRows]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val n = args.lift(2).map(_.toInt).getOrElse(20)
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct)
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     val t0 = System.nanoTime()

@@ -1,24 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Quick smoke main: runs the flagship `SparkEntry.entry` and prints its
   * row count — mirrors the driver's rows>0 smoke check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct, graft.expressions.RewriteRollingHash, graft.plans.RewriteGroupedTopK)
-    spark.experimental.extraStrategies ++= Seq(graft.plans.GroupedTopKStrategy)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -74,8 +74,8 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
-  /** Session conf every graft session needs at BUILD time (callers pass
-    * these to SparkSession.builder — never mutated mid-session):
+  /** Session conf every graft session needs at BUILD time (GraftSession
+    * passes these to SparkSession.builder — never mutated mid-session):
     *  - events.ts is parquet TIMESTAMP(NANOS) which Spark's vectorized
     *    reader rejects; `nanosAsLong` reads it as a long instead.
     *  - AQE + skew-join pinned explicitly: the join/skew scale notes

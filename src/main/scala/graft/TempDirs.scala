@@ -1,8 +1,7 @@
 package graft
 
-/** Self-cleaning scratch directories for the session mains and the test
-  * fixture. Every Bench/Verify/Explain/Show/TestSpark run builds its
-  * session over a fresh temp warehouse (so managed tables — q96's
+/** Self-cleaning scratch directories. Every `GraftSession` (the mains
+  * and the test fixture) is built over a fresh temp warehouse (so managed tables — q96's
   * bucketed lineitem+orders copies — never land in a spark-warehouse/
   * inside the repo), but those directories used to outlive the JVM and
   * accumulate across runs. A shutdown hook deletes the directory

@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed tables (q96 bucketed setup) go to a self-cleaning temp
-      // dir, never a spark-warehouse/ in the process cwd
-      .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct, graft.expressions.RewriteRollingHash, graft.plans.RewriteGroupedTopK, graft.plans.RewriteAggOnRollup)
-    spark.experimental.extraStrategies ++= Seq(graft.plans.GroupedTopKStrategy)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q55,q73 restricts the dump for local iteration
     // (same contract as Bench); the driver leaves it unset.

@@ -1672,8 +1672,8 @@ object Graph {
     * edge side, so when `e` is a table bucketed on `src`
     * (Warehouse.writeBucketed, the q96/q171 discipline) every step's
     * frontier⋈edges join reads the bucketed layout without an
-    * edge-sized Exchange — GraphBucketProbe's walks leg measures the
-    * delta and asserts output identity. Same output contract as
+    * edge-sized Exchange (the r20 A/B in SCALE.md measured the delta
+    * and asserted output identity). Same output contract as
     * deterministicWalks on the same edge set. */
   def deterministicWalksPrepared(eRaw: DataFrame, length: Int,
                                  salt: String = "dw:"): DataFrame = {

@@ -217,7 +217,7 @@ object TextAnalysis {
     * semantics; Long wrap-around is JVM-specific). Row-local.
     *
     * Dispatches to the fused native expression (graft_rolling_hash,
-    * registered by Verify/Bench/Smoke/GraftExtensions): the HOF form
+    * registered by GraftSession and GraftExtensions): the HOF form
     * below materializes one single-char string PER CHARACTER per
     * document. TextAnalysisSpec pins native ≡ HOF. */
   def rollingHash(text: Column): Column =

@@ -68,33 +68,27 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("rewritten plan equals unrewritten on hostile inputs (nulls preserved)") {
-    val prev = spark.experimental.extraOptimizations
     def run(): Seq[Option[Double]] =
       hostileVectors
         .select(Similarity.dot(col("a"), col("b")).as("d"))
         .collect()
         .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
-    spark.experimental.extraOptimizations = prev :+ RewriteDotProduct
-    val withRule = try run() finally spark.experimental.extraOptimizations = prev
-    val withoutRule = run()
+    val withRule = run()
+    val withoutRule = withoutRules(RewriteDotProduct)(run())
     assert(withRule === withoutRule)
     assert(withRule === Seq(Some(11.0), None, None, None))
   }
 
   test("rule conservatism: degenerate merge lambda (acc, v) -> acc + acc is left untouched") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RewriteDotProduct
-    try {
-      val q = Tables.embeddings(spark, sfDir).limit(10)
-        .select(aggregate(
-          zip_with(col("embedding"), col("embedding"),
-            (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, _) => acc + acc).as("s"))
-      val touched = q.queryExecution.optimizedPlan
-        .collect { case n => n.expressions }.flatten
-        .exists(_.exists(_.isInstanceOf[DotProductF32]))
-      assert(!touched, "degenerate merge lambda must not be rewritten as a dot product")
-    } finally spark.experimental.extraOptimizations = prev
+    val q = Tables.embeddings(spark, sfDir).limit(10)
+      .select(aggregate(
+        zip_with(col("embedding"), col("embedding"),
+          (x, y) => x.cast("double") * y.cast("double")),
+        lit(0.0), (acc, _) => acc + acc).as("s"))
+    val touched = q.queryExecution.optimizedPlan
+      .collect { case n => n.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[DotProductF32]))
+    assert(!touched, "degenerate merge lambda must not be rewritten as a dot product")
   }
 
   test("graft_dot survives codegen and interpreted paths identically") {
@@ -109,52 +103,41 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("RewriteDotProduct swaps the HOF dot product for the fused native expression") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RewriteDotProduct
-    try {
-      val q = Tables.embeddings(spark, sfDir).limit(100)
-        .select(col("vec_id"),
-          Similarity.dot(col("embedding"), col("embedding")).as("d"))
-      val optimized = q.queryExecution.optimizedPlan
-      val rewritten = optimized.collect { case n => n.expressions }.flatten
-        .exists(_.exists(_.isInstanceOf[DotProductF32]))
-      assert(rewritten, s"rule did not fire:\n$optimized")
+    val q = Tables.embeddings(spark, sfDir).limit(100)
+      .select(col("vec_id"),
+        Similarity.dot(col("embedding"), col("embedding")).as("d"))
+    val optimized = q.queryExecution.optimizedPlan
+    val rewritten = optimized.collect { case n => n.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[DotProductF32]))
+    assert(rewritten, s"rule did not fire:\n$optimized")
 
-      // results are identical with and without the rewrite
-      val withRule = q.as[(Long, Double)].collect().toSet
-      spark.experimental.extraOptimizations = prev
-      val withoutRule = q.as[(Long, Double)].collect().toSet
-      assert(withRule === withoutRule)
-    } finally spark.experimental.extraOptimizations = prev
+    // results are identical with and without the rewrite
+    val withRule = q.as[(Long, Double)].collect().toSet
+    val withoutRule = withoutRules(RewriteDotProduct)(q.as[(Long, Double)].collect().toSet)
+    assert(withRule === withoutRule)
   }
 
   test("RewriteRollingHash swaps the HOF fold for RollingHashMod; equal results; conservative") {
     import graft.expressions.{RewriteRollingHash, RollingHashMod}
     import graft.ops.TextAnalysis
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RewriteRollingHash
-    try {
-      val q = Tables.documents(spark, sfDir).limit(50)
-        .select(col("doc_id"), TextAnalysis.rollingHashHof(col("text")).as("h"))
-      val fired = q.queryExecution.optimizedPlan
-        .collect { case n => n.expressions }.flatten
-        .exists(_.exists(_.isInstanceOf[RollingHashMod]))
-      assert(fired, s"rule did not fire:\n${q.queryExecution.optimizedPlan}")
-      val withRule = q.as[(Long, Long)].collect().toSet
-      spark.experimental.extraOptimizations = prev
-      val withoutRule = q.as[(Long, Long)].collect().toSet
-      assert(withRule === withoutRule)
+    val q = Tables.documents(spark, sfDir).limit(50)
+      .select(col("doc_id"), TextAnalysis.rollingHashHof(col("text")).as("h"))
+    val fired = q.queryExecution.optimizedPlan
+      .collect { case n => n.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[RollingHashMod]))
+    assert(fired, s"rule did not fire:\n${q.queryExecution.optimizedPlan}")
+    val withRule = q.as[(Long, Long)].collect().toSet
+    val withoutRule = withoutRules(RewriteRollingHash)(q.as[(Long, Long)].collect().toSet)
+    assert(withRule === withoutRule)
 
-      // conservatism: a different modulus is NOT our hash — untouched
-      spark.experimental.extraOptimizations = prev :+ RewriteRollingHash
-      val other = Tables.documents(spark, sfDir).limit(5)
-        .select(aggregate(split(col("text"), ""), lit(0L),
-          (acc, c) => pmod(acc * 31L + ascii(c).cast("long"), lit(97L))).as("h"))
-      val touched = other.queryExecution.optimizedPlan
-        .collect { case n => n.expressions }.flatten
-        .exists(_.exists(_.isInstanceOf[RollingHashMod]))
-      assert(!touched, "fold with a different modulus must not be rewritten")
-    } finally spark.experimental.extraOptimizations = prev
+    // conservatism: a different modulus is NOT our hash — untouched
+    val other = Tables.documents(spark, sfDir).limit(5)
+      .select(aggregate(split(col("text"), ""), lit(0L),
+        (acc, c) => pmod(acc * 31L + ascii(c).cast("long"), lit(97L))).as("h"))
+    val touched = other.queryExecution.optimizedPlan
+      .collect { case n => n.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[RollingHashMod]))
+    assert(!touched, "fold with a different modulus must not be rewritten")
   }
 
   test("graft_band_keys null semantics: null vec, dims mismatch, null element all yield null") {
@@ -225,6 +208,23 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
       .apply(new org.apache.spark.sql.SparkSessionExtensions)
   }
 
+  test("the shared test session is the production GraftSession: rules, strategy, functions") {
+    import graft.expressions.RewriteRollingHash
+    import graft.plans.{GroupedTopKStrategy, RewriteAggOnRollup, RewriteGroupedTopK}
+    val s = TestSpark.spark
+    assert(s.experimental.extraOptimizations === Seq(RewriteDotProduct,
+      RewriteRollingHash, RewriteGroupedTopK, RewriteAggOnRollup))
+    assert(s.experimental.extraStrategies === Seq(GroupedTopKStrategy))
+    // the 12 functions GraftExtensions injects at config time
+    val names = Seq("graft_dot", "graft_band_keys", "graft_simhash",
+      "graft_minhash", "graft_bloom_agg", "graft_bloom_contains",
+      "graft_rolling_hash", "graft_jaro_winkler", "graft_kll_agg",
+      "graft_kll_merge", "graft_kll_quantile", "graft_kll_n")
+    val missing = names.filterNot(n => s.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"unresolved: $missing")
+  }
+
   test("KLL functions are registered and SQL-callable end to end") {
     // fixture registers via KllExpressions.register (the same wiring
     // GraftExtensions injects — applied-cleanly check above); the SQL
@@ -247,20 +247,16 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("rule conservatism: a non-dot aggregate(zip_with) is left untouched") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RewriteDotProduct
-    try {
-      // sum of element-wise MAX — same shape, different lambda: must not rewrite
-      val q = Tables.embeddings(spark, sfDir).limit(10)
-        .select(aggregate(
-          zip_with(col("embedding"), col("embedding"),
-            (x, y) => greatest(x.cast("double"), y.cast("double"))),
-          lit(0.0), (acc, v) => acc + v).as("s"))
-      val touched = q.queryExecution.optimizedPlan
-        .collect { case n => n.expressions }.flatten
-        .exists(_.exists(_.isInstanceOf[DotProductF32]))
-      assert(!touched)
-    } finally spark.experimental.extraOptimizations = prev
+    // sum of element-wise MAX — same shape, different lambda: must not rewrite
+    val q = Tables.embeddings(spark, sfDir).limit(10)
+      .select(aggregate(
+        zip_with(col("embedding"), col("embedding"),
+          (x, y) => greatest(x.cast("double"), y.cast("double"))),
+        lit(0.0), (acc, v) => acc + v).as("s"))
+    val touched = q.queryExecution.optimizedPlan
+      .collect { case n => n.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[DotProductF32]))
+    assert(!touched)
   }
 
   /** Jaro–Winkler parity cases, each value adjudicated against DuckDB's

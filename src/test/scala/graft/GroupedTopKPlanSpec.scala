@@ -44,15 +44,12 @@ class GroupedTopKPlanSpec extends AnyFunSuite with SparkFixture {
   test("rows equal the un-rewritten window form exactly (incl. ranks)") {
     val got = topkFrame(3)
       .as[(Long, Double, Long, Int, Int)].collect().toSet
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev.filterNot(_ == RewriteGroupedTopK)
-    try {
+    withoutRules(RewriteGroupedTopK) {
       val want = topkFrame(3)
       assert(want.queryExecution.executedPlan.toString.contains("Window"),
         "control plan must be the window form")
       assert(got === want.as[(Long, Double, Long, Int, Int)].collect().toSet)
-    } finally spark.experimental.extraOptimizations = prev
+    }
   }
 
   test("strict bound (<) and reversed comparison forms rewrite with the right k") {
@@ -120,13 +117,9 @@ class GroupedTopKPlanSpec extends AnyFunSuite with SparkFixture {
       assert(exec.nonEmpty, "GroupedTopKExec missing from the executed plan")
       assert(exec.get.metrics("sortFallbackCount").value > 0,
         "cutoff=2 must trigger the sort fallback")
-      val prev = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations =
-        prev.filterNot(_ == RewriteGroupedTopK)
-      try {
-        val want = topkFrame(3).as[(Long, Double, Long, Int, Int)].collect().toSet
-        assert(got === want)
-      } finally spark.experimental.extraOptimizations = prev
+      val want = withoutRules(RewriteGroupedTopK)(
+        topkFrame(3).as[(Long, Double, Long, Int, Int)].collect().toSet)
+      assert(got === want)
     }
   }
 

@@ -4,39 +4,19 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** One shared local session for the whole ScalaTest run (suites execute
   * sequentially inside the single forked test JVM — build.sbt
-  * `Test / fork := true`). Mirrors Verify/Bench session config:
-  * UTC, small shuffle partitions, Tables.sessionConf applied at BUILD
-  * time (never mutated mid-session — VERDICT r1 #3).
+  * `Test / fork := true`): the production `GraftSession` at 4 cores, so
+  * plan-shape pins see the production plans. The core count is fixed,
+  * not read from SPARK_GRAFT_CPUS: job- and partition-count pins assume
+  * 4 shuffle partitions on any host.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed tables (WarehouseSpec bucketing) go to a self-cleaning
-      // temp dir, not a spark-warehouse/ directory inside the repo
-      .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val s = builder.getOrCreate()
-    // native function surface (graft_dot, graft_band_keys) — same
-    // registration Verify/Bench/Show/Explain apply; ops.Similarity's
-    // sketch path resolves graft_band_keys by name.
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.expressions.KllExpressions.register(s)
-    // the grouped top-k rule + strategy, as in Verify/Bench, so
-    // plan-shape pins see the production plans. (RewriteDotProduct /
-    // RewriteRollingHash are deliberately NOT session-global here —
-    // ExtensionsSpec installs them per-test to compare the rewritten
-    // and declarative forms against each other.)
-    s.experimental.extraOptimizations ++= Seq(graft.plans.RewriteGroupedTopK, graft.plans.RewriteAggOnRollup)
-    s.experimental.extraStrategies ++= Seq(graft.plans.GroupedTopKStrategy)
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -60,6 +40,15 @@ trait SparkFixture {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** Run `body` with `rules` taken out of the session's optimizer rules,
+    * restoring the previous list afterwards — the "without rule" side of
+    * a rewrite A/B on the shared production session. */
+  def withoutRules[A](rules: Rule[LogicalPlan]*)(body: => A): A = {
+    val prev = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = prev.filterNot(rules.contains)
+    try body finally spark.experimental.extraOptimizations = prev
   }
 
   /** Spark jobs `body` starts, counted by a listener on a job group.

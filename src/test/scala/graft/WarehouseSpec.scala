@@ -78,7 +78,7 @@ class WarehouseSpec extends AnyFunSuite with SparkFixture {
     // materialize Graph.orientEdges once, bucketed on s — the wedge
     // self-join (the Σ outdeg² fan-out stage) then co-locates both
     // sides at the scan and shuffles NOTHING below the join.
-    // GraphBucketProbe carries the measured A/B at the 10× pair.
+    // SCALE.md (r15) records the measured A/B at the 10× pair.
     // deterministic subset (a LIMIT varies per execution and would
     // make the A/B compare graphs that differ)
     val ib = Tables.lineitem(spark, sfDir)
