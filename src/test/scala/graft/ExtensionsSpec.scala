@@ -2,6 +2,7 @@ package graft
 
 import graft.expressions.{DotProductF32, RewriteDotProduct, VectorExpressions}
 import graft.ops.Similarity
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +14,18 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
 
   test("graft_dot registers and equals the declarative zip_with/aggregate dot") {
     VectorExpressions.register(spark)
-    val bad = Tables.embeddings(spark, sfDir).limit(200)
-      .select(
-        Similarity.dot(col("embedding"), col("embedding")).as("hof"),
-        call_function("graft_dot", col("embedding"), col("embedding")).as("native"))
-      .filter(abs(col("hof") - col("native")) > 1e-9)
-    assert(bad.isEmpty)
+    // The rewrite rule is off, so the "hof" side runs as the
+    // zip_with/aggregate fold and not as DotProductF32.
+    withoutRules(RewriteDotProduct) {
+      val bad = Tables.embeddings(spark, sfDir).limit(200)
+        .select(
+          Similarity.dot(col("embedding"), col("embedding")).as("hof"),
+          call_function("graft_dot", col("embedding"), col("embedding")).as("native"))
+        .filter(abs(col("hof") - col("native")) > 1e-9)
+      assert(optimizedHas[ArrayAggregate](bad),
+        s"HOF witness does not run as a fold:\n${bad.queryExecution.optimizedPlan}")
+      assert(bad.isEmpty)
+    }
   }
 
   test("graft_dot null semantics: null array yields null; empty arrays yield 0") {
@@ -37,9 +44,11 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     * (zip_with null-pads → acc + null poisons the fold) and null
     * elements (null * y → null element, same poisoning). The native
     * expression must agree exactly, or RewriteDotProduct silently
-    * changes user results (VERDICT r3 "what's wrong" #3). */
+    * changes user results (VERDICT r3 "what's wrong" #3). The rows come
+    * from an RDD: a local Seq would be folded into a LocalRelation at
+    * optimization, before RewriteDotProduct runs. */
   private def hostileVectors = {
-    Seq(
+    spark.sparkContext.parallelize(Seq(
       (Seq[Option[Float]](Some(1.0f), Some(2.0f)),
        Seq[Option[Float]](Some(3.0f), Some(4.0f))),   // clean → 11.0
       (Seq[Option[Float]](Some(1.0f), Some(2.0f), Some(3.0f)),
@@ -47,18 +56,22 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
       (Seq[Option[Float]](Some(1.0f), None),
        Seq[Option[Float]](Some(2.0f), Some(5.0f))),   // null element → null
       (Seq[Option[Float]](None),
-       Seq[Option[Float]](None)))                     // all-null elements → null
+       Seq[Option[Float]](None))), 1)                 // all-null elements → null
       .toDF("a", "b")
       .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
   }
 
   test("graft_dot matches HOF dot on length mismatch and null elements") {
     VectorExpressions.register(spark)
-    val rows = hostileVectors
-      .select(
-        Similarity.dot(col("a"), col("b")).as("hof"),
-        call_function("graft_dot", col("a"), col("b")).as("native"))
-      .collect()
+    val rows = withoutRules(RewriteDotProduct) {
+      val q = hostileVectors
+        .select(
+          Similarity.dot(col("a"), col("b")).as("hof"),
+          call_function("graft_dot", col("a"), col("b")).as("native"))
+      assert(optimizedHas[ArrayAggregate](q),
+        s"HOF witness does not run as a fold:\n${q.queryExecution.optimizedPlan}")
+      q.collect()
+    }
     def cell(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
       if (r.isNullAt(i)) None else Some(r.getDouble(i))
     val hof = rows.map(cell(_, 0)).toSeq
@@ -73,6 +86,8 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
         .select(Similarity.dot(col("a"), col("b")).as("d"))
         .collect()
         .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    assert(optimizedHas[DotProductF32](
+      hostileVectors.select(Similarity.dot(col("a"), col("b")))), "rule did not fire")
     val withRule = run()
     val withoutRule = withoutRules(RewriteDotProduct)(run())
     assert(withRule === withoutRule)

@@ -2,8 +2,11 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -50,6 +53,15 @@ trait SparkFixture {
     spark.experimental.extraOptimizations = prev.filterNot(rules.contains)
     try body finally spark.experimental.extraOptimizations = prev
   }
+
+  /** Whether `df`'s optimized plan holds an expression of class `E` —
+    * e.g. that a declarative witness still runs as its HOF form
+    * (`ArrayAggregate`) rather than as the native expression a rule
+    * swaps in. Call it inside the same `withoutRules` block as the
+    * action: the optimized plan is computed once, on first use. */
+  def optimizedHas[E <: Expression](df: DataFrame)(implicit e: ClassTag[E]): Boolean =
+    df.queryExecution.optimizedPlan.collect { case n => n.expressions }.flatten
+      .exists(_.exists(e.runtimeClass.isInstance))
 
   /** Spark jobs `body` starts, counted by a listener on a job group.
     * Listener delivery is asynchronous but ordered, so a marker job

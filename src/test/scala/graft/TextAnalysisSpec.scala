@@ -1,6 +1,8 @@
 package graft
 
+import graft.expressions.RewriteRollingHash
 import graft.ops.TextAnalysis
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -112,12 +114,20 @@ class TextAnalysisSpec extends AnyFunSuite with SparkFixture {
   test("native rollingHash ≡ the declarative HOF form, incl. multi-byte code points") {
     // ASCII, 2-byte (é), 3-byte CJK, mixed, empty — the HOF witness is
     // the SEMANTIC DEFINITION (split("") + ascii per element); the
-    // fused expression must agree everywhere, incl. empty ⇒ 0.
+    // fused expression must agree everywhere, incl. empty ⇒ 0. The
+    // rewrite rule is off, so the witness runs as the HOF fold and not
+    // as RollingHashMod (the native call does not need the rule). The
+    // rows come from an RDD: a local Seq would be folded into a
+    // LocalRelation at optimization, before any plan check could see it.
     val texts = Seq("abc", "héllo wörld", "中文 文档 内容", "a中é!", "")
-    val rows = texts.toDF("text").select(
-      TextAnalysis.rollingHash(col("text")).as("native"),
-      TextAnalysis.rollingHashHof(col("text")).as("hof"))
-      .as[(Long, Long)].collect()
+    val rows = withoutRules(RewriteRollingHash) {
+      val q = spark.sparkContext.parallelize(texts, 1).toDF("text").select(
+        TextAnalysis.rollingHash(col("text")).as("native"),
+        TextAnalysis.rollingHashHof(col("text")).as("hof"))
+      assert(optimizedHas[ArrayAggregate](q),
+        s"HOF witness does not run as a fold:\n${q.queryExecution.optimizedPlan}")
+      q.as[(Long, Long)].collect()
+    }
     rows.zip(texts).foreach { case ((n, h), t) =>
       assert(n === h, s"native != hof for '$t'")
     }
