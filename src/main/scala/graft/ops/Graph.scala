@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -408,44 +410,39 @@ object Graph {
     * community seeding and spam/bot subgraph mining.
     *
     * Input: (u, v) edge list, SYMMETRIZED by the caller (each
-    * undirected edge in both directions, no self-loops). Each round is
-    * one map-side-combined degree count + two LEFT SEMI joins (u-side,
-    * v-side) — set intersection, never a fan-out — followed by a
-    * localCheckpoint to truncate the growing lineage (the q121 /
-    * q81-CC loop discipline; without it round N replans rounds 1..N-1).
-    * The loop's only driver-side values are the per-round edge COUNTS
-    * (scalar aggregates — bounded, never row collection); convergence
-    * is count-stability, ≤ |V| rounds in theory, a handful in
-    * practice. Exact, not approximate: the peel order provably cannot
-    * change the fixpoint.
+    * undirected edge in both directions, no self-loops). The state is
+    * the (node, deg) table. Round r counts degrees over the ORIGINAL
+    * edges restricted, on u and v, to the nodes round r-1 kept: alive
+    * sets only shrink, so these are the last round's edges restricted.
+    * The witness counts nodes below k; the round where none is left
+    * is the output (no confirming round, no second degree count).
+    * Exact: the peel order provably cannot change the fixpoint.
     *
-    * Scale shape per round: degree agg partitions on u; the semi joins
-    * reuse that same key (one shuffle ancestry). Edges are re-scanned
-    * from the checkpoint, node set only shrinks — at 100 TB, bucket
-    * the edge list on u (Warehouse.writeBucketed) so every round's agg
-    * and semi-join are Exchange-free.
+    * Scale shape per round: two semi joins broadcast the node-sized
+    * kept set against the edge checkpoint, streamed unshuffled (the
+    * checkpoints carry measured sizes — `measured`), then one
+    * map-side-combined degree shuffle on u. The edge checkpoint is
+    * released on return; the returned frame reads the final table.
     *
     * Output: (node, deg) for the surviving core, deg = within-core
     * degree (≥ k). */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    // no round cap: every round but the last deletes an edge, so the
-    // peel stops (edge count unchanged, or zero) within |E| rounds
-    val e = fixpoint(
-      edges.select(col("u"), col("v"))
-        .filter(col("u").isNotNull && col("v").isNotNull),
-      Seq(count(lit(1))), Int.MaxValue)(
-      (prev, cur) => noneLeft(prev, cur) || unchanged(prev, cur)) {
-      (held, _) =>
-        val e = held.last
-        val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("u"))
-        e.join(keep, Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
-          .select(col("u"), col("v"))
+    val e = measured(edges.select(col("u"), col("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
+      .localCheckpoint())
+    def degrees(es: DataFrame): DataFrame =
+      es.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+        .select(col("u").as("node"), col("deg"))
+    // count, not sum: an empty core must read 0, not null
+    val core = fixpoint(degrees(e), Seq(count(when(col("deg") < k, 1))),
+      Int.MaxValue)(noneLeft) { (held, _) =>
+      val keep = held.last.filter(col("deg") >= k).select(col("node"))
+      degrees(e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
     }.last
-    e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      .select(col("u").as("node"), col("deg"))
+    releaseCheckpoint(e)
+    core
   }
 
   /** Multi-source BFS: exact minimum hop distance from a seed set over
@@ -455,46 +452,43 @@ object Graph {
     * (density), and ccStar (labels): "how far is
     * every node from this set", the reachability/blast-radius query.
     *
-    * Exactly the textbook frontier algorithm in joins: the level-i
-    * frontier equi-joins the edge list on src, the new frontier is the
-    * distinct dst set anti-joined against everything already
-    * labelled, and the distance table grows by one level per round.
-    * Deterministic by construction (min-distance is path-order
-    * independent), so callers can hash-gate it (the q303 fixpoint
-    * discipline).
+    * The state is one (node, dist) table. Round r joins its frontier
+    * (dist = r-1) to the edge list on src, unions the reached
+    * (dst, r) rows with the state and keeps min(dist) per node — the
+    * union of the levels, as a node's first level is its smallest. A
+    * round that reaches no new node leaves the row count (the
+    * witness) unchanged and stops the loop. Deterministic (min-dist
+    * is path-order independent), so callers can hash-gate it.
     *
-    * Scale shape per round: ONE shuffle keyed on the join key (the
-    * frontier side of the equi-join) + the anti-join keyed on node;
-    * the edge list is scanned from its checkpoint each round — at
-    * 100 TB, bucket it on src (Warehouse.writeBucketed) so every
-    * round's expansion is Exchange-free. Work per round is
-    * |frontier adjacency|, never |V|²; rounds are bounded by maxHops
-    * (graph diameter if larger). The per-level checkpoints are
-    * released once the final distance table eager-checkpoints; the
-    * returned frame reads from that ONE output-sized checkpoint
-    * (kCore's one-leaked-checkpoint discipline).
+    * Scale shape per round: the node-sized frontier is broadcast
+    * against the edge checkpoint, streamed unshuffled (the
+    * checkpoints carry measured sizes — `measured`; a state over the
+    * broadcast threshold plans a shuffled join), then one
+    * map-side-combined min shuffle of the state. Rounds are bounded
+    * by maxHops. The edge checkpoint is released on return; the
+    * returned frame reads the final state.
     *
     * Output: (node, dist) for every node within maxHops of a seed —
     * seeds at 0, unreachable nodes absent. Isolated seeds still
     * appear at 0. */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    val e = edges.select(col("src"), col("dst"))
+    val e = measured(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint()
-    val levels = fixpoint(
+      .localCheckpoint())
+    val dist = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
         .select(col("node"), lit(0L).as("dist")),
-      Seq(count(lit(1))), maxHops, keepRounds = true)(noneLeft) {
-      (held, level) =>
-        held.last.join(e, col("node") === col("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(held.reduce(_ unionByName _), Seq("node"), "left_anti")
-          .select(col("node"), lit(level.toLong).as("dist"))
-    }
+      Seq(count(lit(1))), maxHops)(unchanged) { (held, r) =>
+      val s = held.last
+      s.filter(col("dist") === r - 1).join(e, col("node") === col("src"))
+        .select(col("dst").as("node"), lit(r.toLong).as("dist"))
+        .unionByName(s)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    }.last
     releaseCheckpoint(e)
-    settle(levels.reduce(_ unionByName _), levels)
+    dist
   }
 
   /** WEIGHTED SINGLE-SOURCE SHORTEST PATHS, bounded-hop Bellman–Ford
@@ -2042,9 +2036,10 @@ object Graph {
     *    released as soon as the next one has materialized, so exactly
     *    the final round's checkpoint outlives the call (the returned
     *    frame reads from it). With `keepRounds` every round is held:
-    *    level-synchronous traversals anti-join against the union of
-    *    their levels and read them all after the loop; they release
-    *    them through `settle`.
+    *    the level-synchronous centrality traversals anti-join against
+    *    the union of their levels and read them all after the loop;
+    *    they release them through `settle`. Every round's checkpoint
+    *    carries its measured size (`measured`).
     *
     * `step(held, r)` builds round r (1-based) from the held rounds —
     * all of them with `keepRounds`, else only the current state;
@@ -2078,18 +2073,18 @@ object Graph {
 
   /** Bound an iterative op's retained storage (VERDICT r21 #1): take
     * ONE eager localCheckpoint of the final reduced frame — a single
-    * output-sized copy — then release every per-round level checkpoint
-    * it was derived from. The r21 lazy-union form kept ALL level
-    * checkpoints persisted for the life of the returned frame
-    * (O(rounds × state) blocks, unreleasable by callers); this
-    * restores the kCore one-leaked-checkpoint rule: per call, exactly
-    * the output-sized final checkpoint stays, and it is a top-level
+    * output-sized copy, with its measured size (`measured`) — then
+    * release every per-round level checkpoint it was derived from.
+    * The r21 lazy-union form kept ALL level checkpoints persisted for
+    * the life of the returned frame (O(rounds × state) blocks,
+    * unreleasable by callers); here, per call, exactly the
+    * output-sized final checkpoint stays, and it is a top-level
     * LogicalRDD a caller CAN release. Recomputation-safe on a real
     * cluster too — the result no longer lazily depends on blocks that
     * die with their executor. */
   private def settle(out: DataFrame,
                      retained: Iterable[DataFrame]): DataFrame = {
-    val res = out.localCheckpoint() // eager: materializes before release
+    val res = measured(out.localCheckpoint()) // eager: materializes before release
     retained.foreach(releaseCheckpoint)
     res
   }
@@ -2105,12 +2100,13 @@ object Graph {
     * miss falls back to an explicit aggregate over the (already
     * materialized, node-sized) checkpoint — one extra cheap job,
     * never a hang, values identical (deterministic aggregates over
-    * the same materialized rows). */
-  private def observedCheckpoint(df: DataFrame, metrics: Column*)
+    * the same materialized rows). The checkpoint carries its measured
+    * size (`measured`). */
+  private[graft] def observedCheckpoint(df: DataFrame, metrics: Column*)
       : (DataFrame, org.apache.spark.sql.Row) = {
     val obs = org.apache.spark.sql.Observation()
-    val ckpt = df.observe(obs, metrics.head, metrics.tail: _*)
-      .localCheckpoint(true)
+    val ckpt = measured(df.observe(obs, metrics.head, metrics.tail: _*)
+      .localCheckpoint(true))
     val row =
       try scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(10, "s"))
@@ -2120,13 +2116,28 @@ object Graph {
     (ckpt, row)
   }
 
+  /** A materialized checkpoint planned from its MEASURED size: the
+    * bytes the block manager holds for its blocks replace Spark's
+    * estimate of the producing plan, which without CBO multiplies a
+    * join's input sizes — a small round state looked huge, so joins
+    * against it shuffled both sides (SCALE.md, optimizer traps).
+    * Blocks are stored deserialized, so this over-counts: the broadcast
+    * threshold still decides, and errs toward the shuffled join. */
+  private def measured(ckpt: DataFrame): DataFrame =
+    ckpt.queryExecution.logical match {
+      case lr: LogicalRDD =>
+        GraftSql.storedBytes(lr.rdd.id).fold(ckpt)(bytes =>
+          GraftSql.withStats(ckpt, lr, Statistics(sizeInBytes = bytes)))
+      case _ => ckpt
+    }
+
   /** Free a localCheckpoint's block-manager storage (best-effort):
     * the checkpointed RDD sits behind the LogicalRDD node the
     * checkpoint call returned; Dataset.unpersist only covers
     * CacheManager entries and would silently leak it. */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     try df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: LogicalRDD =>
         lr.rdd.unpersist(blocking = false); ()
       case _ => ()
     } catch { case NonFatal(_) => () }

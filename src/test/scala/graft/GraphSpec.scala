@@ -1293,10 +1293,13 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     retainedAfter("ccStar")(Graph.ccStar(undirected))
   }
 
-  test("bfs, sssp and ccStar build with a pinned number of Spark jobs") {
+  test("bfs, sssp, ccStar and kCore build with a pinned number of Spark jobs") {
     // one checkpoint job per round (the witness rides it): an extra
-    // job per round or per call moves these counts. Fixtures are the
-    // hand-checked bfs, sssp and ccStar inputs above.
+    // job per round or per call moves these counts, and so does a
+    // join that plans a shuffle against a checkpoint it could
+    // broadcast. Fixtures are the hand-checked bfs, sssp and ccStar
+    // inputs above; kCore's is K5 at k = 3, whose minimum degree (4)
+    // leaves nothing to peel.
     val paths = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L),
       (9L, 10L)).toDF("src", "dst")
     val diamond = Seq(
@@ -1310,6 +1313,55 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val (_, bfsJobs) = jobsIn(Graph.bfs(paths, seed, maxHops = 10))
     val (_, ssspJobs) = jobsIn(Graph.sssp(diamond, seed, rounds = 4))
     val (_, ccJobs) = jobsIn(Graph.ccStar(pairs))
-    assert((bfsJobs, ssspJobs, ccJobs) === ((22, 11, 35)))
+    val k5 = (for (a <- 1L to 5L; b <- 1L to 5L if a != b) yield (a, b))
+      .toDF("u", "v")
+    val (core, kCoreJobs) = jobsIn(Graph.kCore(k5, k = 3))
+    assert(core.count() === 5L)
+    assert((bfsJobs, ssspJobs, ccJobs, kCoreJobs) === ((17, 11, 34, 3)))
+  }
+
+  test("a checkpoint is planned from its measured size, and released with it") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // Both frames come out of joins, so without CBO their estimates
+    // are products of their inputs' sizes, far over the broadcast
+    // threshold: only the measured sizes can plan a broadcast here.
+    // (A range, not a local Seq: a filter over a LocalRelation is
+    // folded into a smaller LocalRelation before the join is estimated.)
+    val raw = spark.range(1L, 2001L)
+      .select((col("id") % 50).as("src"), col("id").as("dst"))
+    val e = Graph.observedCheckpoint(
+      raw.join(raw.select(col("dst")), Seq("dst")).select("src", "dst"),
+      count(lit(1)))._1
+    val state = Graph.observedCheckpoint(
+      raw.as("a").join(raw.as("b"), col("a.dst") === col("b.dst"))
+        .filter(col("a.dst") < 10)
+        .select(col("a.dst").as("node"), lit(0L).as("dist")),
+      count(lit(1)))._1
+    val stateBytes = state.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(stateBytes < e.queryExecution.optimizedPlan.stats.sizeInBytes)
+    def initialBroadcasts(): Int =
+      state.join(e, col("node") === col("src")).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec =>
+          a.initialPlan.collect { case b: BroadcastHashJoinExec => b }.size
+        case p => fail(s"expected an adaptive plan:\n$p")
+      }
+    assert(initialBroadcasts() === 1)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> (stateBytes - 1).toString) {
+      assert(initialBroadcasts() === 0)
+    }
+    def rddId(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.logical match { case lr: LogicalRDD => lr.rdd.id }
+    val ids = Set(rddId(e), rddId(state))
+    Graph.releaseCheckpoint(e)
+    Graph.releaseCheckpoint(state)
+    // unpersist is asynchronous here and the storage info is fed by
+    // the listener bus: poll until both RDDs are gone
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def held = sc.getRDDStorageInfo.map(_.id).toSet & ids
+    while (held.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(held.isEmpty)
   }
 }
