@@ -641,8 +641,10 @@ object Dedup {
   /** Candidate pairs from a PERSISTED band index: the same band-bucket
     * self-join + signature rescore as lshCandidatePairs, but both sides
     * scan the bucketed table — no shingling, no signatures, and (plan-
-    * asserted in PlanShapeSpec) no Exchange below the join. The only
-    * shuffle left is the pair-key dropDuplicates, which carries
+    * asserted in PlanShapeSpec) no Exchange below the join. The `merge`
+    * hint keeps it that way under the broadcast threshold, where Spark
+    * would collect the whole index to the driver and broadcast it. The
+    * only shuffle left is the pair-key dropDuplicates, which carries
     * (id, id, double) rows. Output is identical to the in-memory pass
     * that built the index (DedupSpec pins the equivalence). */
   def lshCandidatePairsFromIndex(spark: org.apache.spark.sql.SparkSession,
@@ -653,7 +655,7 @@ object Dedup {
       col("id").as("id_a"), col("sig").as("sig_a"))
     val b = idx.select(col("band"), col("bucket"),
       col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band", "bucket"))
+    a.join(b.hint("merge"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         estJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))

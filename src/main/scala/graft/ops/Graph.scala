@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -959,58 +960,53 @@ object Graph {
     *    re-attaches to m.
     *
     * The fixpoint is the star forest rooted at each component's
-    * minimum id; labels read off as min(Γ(node) ∪ {node}). Both steps
-    * are one symmetrize + one min groupBy + one broadcast-sized join
-    * per round — and every step's output is node-bounded ∪ edge-
-    * bounded, never a fan-out. Convergence is detected by the
-    * star-forest witness (see ccIsStarForest for the argument) — r22:
-    * evaluated as a row-local violation count OBSERVED on each round's
-    * checkpoint job, over the checkpointed sym⋈mins frame the next
+    * minimum id; labels read off as min(Γ(node) ∪ {node}). Each step
+    * reads J (`ccJoin`): one symmetrizing explode + one windowed min
+    * partitioned by u — one shuffle — and every step's output is
+    * node-bounded ∪ edge-bounded, never a fan-out. Convergence is
+    * detected by the star-forest witness (see ccIsStarForest for the
+    * argument), evaluated as a row-local violation count OBSERVED on
+    * each round's checkpoint job, over the checkpointed J the next
     * round's large-star step and the final label read-off also
-    * consume (one job and one shuffled aggregate + join fewer per
-    * round; see the ccStar body). Everything is
-    * integer min arithmetic — engine-replayable, so the whole
-    * iterated build hash-gates against a WITH RECURSIVE closure
-    * (q343). Input: (u, v) pairs, u ≠ v rows tolerated either order;
-    * isolated nodes don't appear.
+    * consume (see the ccStar body). Everything is integer min
+    * arithmetic — engine-replayable, so the whole iterated build
+    * hash-gates against a WITH RECURSIVE closure (q343). Input: (u, v)
+    * pairs, u ≠ v rows tolerated either order; isolated nodes don't
+    * appear.
     * Output: (node, comp). */
   private[graft] def ccCanon(df: DataFrame): DataFrame =
     df.filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .distinct()
-  private def ccSym(df: DataFrame): DataFrame =
-    df.unionByName(df.select(col("v").as("u"), col("u").as("v")))
-  private def ccMins(nbrs: DataFrame): DataFrame =
-    nbrs.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-  private def ccStarStep(e: DataFrame, large: Boolean): DataFrame = {
-    val nbrs = ccSym(e)
-    val j = nbrs.join(ccMins(nbrs), Seq("u"))
-    if (large)
-      j.filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-    else {
-      val moved = j.filter(col("v") < col("u") && col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val self = ccMins(nbrs).filter(col("u") =!= col("m"))
-        .select(col("u"), col("m").as("v"))
-      moved.unionByName(self)
-    }
+  /** One alternation round from J(e), re-canonicalized. Large-star: every
+    * neighbor v > u re-attaches to m(u). Small-star reads J of those
+    * edges once: every neighbor v < u other than m(u) moves to m(u), and
+    * u attaches to m(u) — one self row per row of J, whose copies the
+    * `ccCanon` distinct absorbs. */
+  private def ccAlternate(j: DataFrame): DataFrame = {
+    val large = j.filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    ccCanon(ccJoin(large).select(explode(array(
+        when(col("v") < col("u") && col("v") =!= col("m"),
+          struct(col("v").as("u"), col("m").as("v"))),
+        when(col("u") =!= col("m"), struct(col("u"), col("m").as("v")))))
+        .as("s"))
+      .filter(col("s").isNotNull)
+      .select(col("s.u"), col("s.v")))
   }
-  /** One alternation round: large-star, then small-star, re-canonicalized. */
-  private[graft] def ccRound(e: DataFrame): DataFrame =
-    ccCanon(ccStarStep(ccStarStep(e, large = true), large = false))
+  /** One alternation round over a canonical edge set. */
+  private[graft] def ccRound(e: DataFrame): DataFrame = ccAlternate(ccJoin(e))
   /** Convergence witness (r17 — the sssp scalar-witness treatment):
     * a canonical edge set is a FIXPOINT of the large-star/small-star
     * alternation ⟺ it is a STAR FOREST rooted at component minima
     * (Kiveris et al. 2014 prove the alternation's fixpoints are
     * exactly the min-rooted star forests — Thm 2 convergence + the
     * star-roundup argument), and star-forest-ness is ONE
-    * edge-bounded filter-count instead of the former count +
+    * edge-bounded filter-count over J instead of the former count +
     * exceptAll set-difference (three jobs, one a full shuffle
     * compare of both edge sets). Per directed symmetrized row
-    * (w → x) with m(w) = min(Γ(w) ∪ {w}):
+    * (w → x) of J with m(w) = min(Γ(w) ∪ {w}):
     *   - x > w (w is the smaller endpoint): w must be its star's
     *     root, i.e. m(w) = w;
     *   - x < w (w is the larger endpoint): x must be w's root AND
@@ -1029,43 +1025,39 @@ object Graph {
     * adversarial shapes (cycle, star, 200-path, mixed). */
   private[graft] def ccIsStarForest(e: DataFrame): Boolean =
     ccJoin(e).filter(ccViolation).isEmpty
-  /** J(e) = sym(e) ⋈ mins(sym(e)): rows (u, v, m), m = min(Γ(u) ∪ {u}). */
-  private def ccJoin(e: DataFrame): DataFrame = {
-    val nbrs = ccSym(e)
-    nbrs.join(ccMins(nbrs), Seq("u"))
-  }
+  /** J(e): rows (u, v, m) for both orientations (u, v) of every edge of
+    * e, m = min(Γ(u) ∪ {u}). One pass: an explode symmetrizes each row
+    * and m is a min windowed on u, so e is planned once and J costs one
+    * exchange on u (SCALE.md, optimizer traps). */
+  private def ccJoin(e: DataFrame): DataFrame =
+    e.select(explode(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("s"))
+      .select(col("s.u").as("u"), col("s.v").as("v"))
+      .withColumn("m", least(
+        min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
   private val ccViolation = (col("v") > col("u") && col("m") =!= col("u")) ||
     (col("v") < col("u") && col("m") =!= col("v"))
+  /** Round 0 of ccStar: J of the canonical, null-free input edges. */
+  private[graft] def ccInit(pairs: DataFrame): DataFrame =
+    ccJoin(ccCanon(pairs.select(col("u"), col("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)))
   def ccStar(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
-    // r22 (VERDICT r21 #3): the per-round checkpoint is now
-    // J(e) = sym(e) ⋈ mins(sym(e)) — rows (u, v, m) — instead of the
-    // canonical edge set e, because all three per-round consumers read
-    // J directly:
-    //   - the star-forest WITNESS is J's row-local violation filter
-    //     (ccIsStarForest used to re-derive sym+mins+join as a second
-    //     shuffle job per round); it now rides the checkpoint
-    //     materialization as the fixpoint witness;
-    //   - the next round's LARGE-STAR step is J.filter(v > u) with its
-    //     sym+mins already inside J (one min-groupBy + join per round
-    //     deleted);
-    //   - the final LABELS are distinct (u, m) of J — exactly the old
-    //     ccSym(e) min read-off (J joins every sym row to its u's min).
-    // J holds 2|e| rows of 3 Longs vs |e| rows of 2 — a 3× checkpoint
-    // bought against one shuffled aggregate + join per round. The
-    // witness also runs BEFORE round 1 now: a star-forest input makes
-    // round 1 the identity (Kiveris et al. Thm 2 — fixpoints are
-    // exactly the min-rooted star forests), so the 0-round exit reads
-    // identical labels.
-    val j = fixpoint(
-      ccJoin(ccCanon(pairs.select(col("u"), col("v"))
-        .filter(col("u").isNotNull && col("v").isNotNull))),
+    // Each round's checkpoint is J (rows (u, v, m)), not the canonical
+    // edge set, because all three per-round consumers read J directly:
+    // the star-forest WITNESS (J's row-local violation count, observed
+    // on the checkpoint job), the next round's LARGE-STAR step and the
+    // final LABELS (distinct (u, m)). With J one windowed pass, a round
+    // is three exchanges — J's window on u over the large-star edges,
+    // the canonical distinct, J's window again — and reads each input
+    // once. The witness also runs BEFORE round 1: a star-forest input
+    // makes round 1 the identity (Kiveris et al. Thm 2), so the
+    // 0-round exit reads identical labels.
+    val j = fixpoint(ccInit(pairs),
       Seq(count(when(ccViolation, 1L)).as("viol")), maxRounds,
       capError = Some(
         s"ccStar did not converge within $maxRounds alternation rounds"))(
       noneLeft) { (held, _) =>
-      val large = held.last.filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      ccJoin(ccCanon(ccStarStep(large, large = false)))
+      ccJoin(ccAlternate(held.last))
     }.last
     j.select(col("u").as("node"), col("m").as("comp")).distinct()
   }

@@ -372,6 +372,29 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("ccStar round 0 reads its input once: no join, one window on u") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.RangeExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // J is one symmetrizing explode + a windowed min partitioned by u:
+    // the input is scanned once, with no min-groupBy joined back. (A
+    // range, not a local Seq: ConvertToLocalRelation would fold a Seq
+    // away before the plan is built.)
+    val pairs = spark.range(1L, 200L)
+      .select(col("id").as("u"), (col("id") + 1).as("v"))
+    val plan = Graph.ccInit(pairs).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => fail(s"expected an adaptive plan:\n$p")
+    }
+    assert(plan.collect { case r: RangeExec => r }.size === 1, s"\n$plan")
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"\n$plan")
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.map(_.partitionSpec.collect { case a: Attribute => a.name }) ===
+      Seq(Seq("u")), s"\n$plan")
+  }
+
   test("ccStar is partition-invariant and matches a random-graph reference") {
     val rnd = new scala.util.Random(13)
     val pairs = Seq.fill(150)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
@@ -1317,7 +1340,7 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       .toDF("u", "v")
     val (core, kCoreJobs) = jobsIn(Graph.kCore(k5, k = 3))
     assert(core.count() === 5L)
-    assert((bfsJobs, ssspJobs, ccJobs, kCoreJobs) === ((17, 11, 34, 3)))
+    assert((bfsJobs, ssspJobs, ccJobs, kCoreJobs) === ((17, 11, 23, 3)))
   }
 
   test("a checkpoint is planned from its measured size, and released with it") {

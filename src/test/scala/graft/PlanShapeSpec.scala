@@ -314,6 +314,27 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  /** The same candidate pass under the production session (broadcast
+    * and AQE on): the tiny fixture index is far under the broadcast
+    * threshold, so only the `merge` hint keeps the self-join a bucketed
+    * SortMergeJoin instead of a job that collects and broadcasts the
+    * whole index. Checked on the final adaptive plan. */
+  test("q120 index candidate pass: a merge join, never a broadcast, under production confs") {
+    val tbl = "graft_lsh_index_planspec_prod"
+    try {
+      graft.ops.Dedup.writeLshIndex(Tables.documents(spark, sfDir),
+        "doc_id", "text", tbl, shingleN = 3, numHashes = 64,
+        bands = 16, buckets = 8)
+      val df = graft.ops.Dedup.lshCandidatePairsFromIndex(spark, tbl)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("SortMergeJoin"),
+        s"expected SMJ over bucketed index scans:\n$p")
+      assert(!p.contains("BroadcastExchange") && !p.contains("BroadcastHashJoin"),
+        s"the index self-join was broadcast:\n$p")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
   /** The incremental flow's scale claim as a plan fact: in q122's
     * candidate join, ONLY the fresh batch may shuffle into the index's
     * bucket layout — the corpus-sized index side reads bucketed with
