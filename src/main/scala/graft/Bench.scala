@@ -47,7 +47,10 @@ object Bench {
     // SPARK_GRAFT_METRICS=1 adds per-query shuffle read/write and spill
     // MB (disk and memory separately, see MetricsAcc) to the JSON under
     // "metrics". Listener totals are process-wide per query
-    // (the bench runs serially, nothing else in flight).
+    // (the bench runs serially, nothing else in flight). The row also
+    // carries the storage still held once the query's checkpoints are
+    // released: persisted RDDs and their MB, which is only the live
+    // session memos (`Checkpoints.shared`) when nothing leaks.
     val acc = if (sys.env.get("SPARK_GRAFT_METRICS").contains("1")) {
       val a = new MetricsAcc
       spark.sparkContext.addSparkListener(a)
@@ -73,6 +76,9 @@ object Bench {
             false
         }
       val dt = (System.nanoTime() - t0) / 1e9
+      // outside the timed span: the noop write materialized the
+      // query's result, so its checkpoints are dead
+      graft.ops.Checkpoints.releaseQuery()
       acc.foreach { a =>
         // drain straggler task-end events before reading the counters —
         // tracked, not slept (ADVICE r16): the listener counts
@@ -89,18 +95,18 @@ object Bench {
         val drained = a.drain()
         if (!drained)
           System.err.println(s"BENCH: metrics drain timed out for $name")
-        if (ok)
+        if (ok) {
+          val (rdds, heldMb) = graft.ops.Checkpoints.held(spark.sparkContext)
           metricRows += s""""$name":{"shuffle_read_mb":${a.shufRead.get / 1e6},""" +
             s""""shuffle_write_mb":${a.shufWrite.get / 1e6},""" +
             s""""disk_spill_mb":${a.diskSpill.get / 1e6},""" +
             s""""mem_spill_mb":${a.memSpill.get / 1e6},""" +
+            s""""storage_held_mb":$heldMb,"persisted_rdds":$rdds,""" +
             s""""drain_timeout":${!drained},""" +
             s""""dirty_neighbor":$stickyDirty}"""
+        }
         stickyDirty = !drained
       }
-      // outside the timed span: free this query's rankedByRange
-      // checkpoint blocks (dead once the noop write materialized)
-      graft.ops.Sampling.releaseCheckpoints()
       (name, dt, ok)
     }
     val qs = results.collect { case (k, v, true) => s"\"" + k + "\":" + v }

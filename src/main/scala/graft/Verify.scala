@@ -20,10 +20,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // the query's parquet has landed (fully materialized), so its
-      // rankedByRange checkpoints are dead — free their block storage
-      // (otherwise each q273/q289/q299/q317 drive leaks blocks for the
-      // session lifetime; r13 ADVICE)
-      graft.ops.Sampling.releaseCheckpoints()
+      // checkpoints are dead: free their storage, or every query's
+      // would stay held for the rest of the run
+      graft.ops.Checkpoints.releaseQuery()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -39,10 +39,9 @@ object Cluster {
     * are; `div` truncates toward zero, so negative coords would split
     * cells at the origin — ENFORCED with a raise_error guard since
     * r17: violation fails loudly instead of mislabeling).
-    * ε-pairs are localCheckpointed once — three
-    * consumers (degree, core edges, border assignment) read them, and
-    * the checkpoint stays persisted because the RETURNED frame reads
-    * from it (the ccStar r15 postmortem rule).
+    * ε-pairs are checkpointed once — three consumers (degree, core
+    * edges, border assignment) read them, and so does the RETURNED
+    * frame (the ccStar r15 postmortem rule).
     *
     * Scale shape: pairs partition by grid cell (co-located, skew
     * bounded by the densest cell); degree and border are one shuffle
@@ -80,14 +79,13 @@ object Cluster {
             (col("cy") + dy).as("cy")))): _*)).as("c"))
       .select(col("a_id"), col("ax"), col("ay"),
         col("c.cx").as("cx"), col("c.cy").as("cy"))
-    val pairs = probes.join(cells.select(col("id").as("b_id"),
+    val pairs = Checkpoints(probes.join(cells.select(col("id").as("b_id"),
         col("x").as("bx"), col("y").as("by"), col("cx"), col("cy")),
         Seq("cx", "cy"))
       .filter(col("a_id") < col("b_id"))
       .filter((col("ax") - col("bx")) * (col("ax") - col("bx")) +
         (col("ay") - col("by")) * (col("ay") - col("by")) <= lit(eps * eps))
-      .select(col("a_id"), col("b_id"))
-      .localCheckpoint()
+      .select(col("a_id"), col("b_id")))
     val nbrs = pairs.select(col("a_id").as("id"), col("b_id").as("nb"))
       .unionByName(pairs.select(col("b_id").as("id"), col("a_id").as("nb")))
     val deg = nbrs.groupBy(col("id")).agg(count(lit(1)).as("__nnb"))
@@ -120,15 +118,14 @@ object Cluster {
     // VOLUME was the q348 wall — this collapses it before the
     // iterated op instead of inside it). repMap is core-count-sized
     // and read three times (both contraction endpoints + the label
-    // expansion) — checkpointed once, the ccStar lifetime rule.
+    // expansion) — checkpointed once.
     val sub = math.max(1L, math.floor(eps.toDouble / math.sqrt(2.0)).toLong)
-    val repMap = pts.join(coreIds, Seq("id"), "left_semi")
+    val repMap = Checkpoints(pts.join(coreIds, Seq("id"), "left_semi")
       .select(col("id"), expr(s"x div ${sub}L").as("sx"),
         expr(s"y div ${sub}L").as("sy"))
       .withColumn("rep", min(col("id")).over(
         org.apache.spark.sql.expressions.Window.partitionBy("sx", "sy")))
-      .select(col("id"), col("rep"))
-      .localCheckpoint()
+      .select(col("id"), col("rep")))
     val contracted = coreEdges
       .join(repMap.select(col("id").as("u"), col("rep").as("ru")), Seq("u"))
       .join(repMap.select(col("id").as("v"), col("rep").as("rv")), Seq("v"))

@@ -697,7 +697,7 @@ object Dedup {
     * replayed appends; sig is a function of id, so the id key is the
     * whole identity — and rewrite one-file-per-bucket, restoring the
     * sort-free bucketed read `writeLshIndex` established. The
-    * localCheckpoint materializes the survivors BEFORE the overwrite
+    * checkpoint materializes the survivors BEFORE the overwrite
     * (Spark refuses to overwrite a table its plan still reads);
     * overwrite recreates the table, so the banding properties are
     * re-applied from the pre-compact metadata. The bucket count comes
@@ -712,11 +712,11 @@ object Dedup {
     val props = meta.properties
     val buckets = meta.bucketSpec.getOrElse(sys.error(
       s"$table has no bucket spec — not a graft LSH index")).numBuckets
-    val rows = spark.table(table)
+    val rows = Checkpoints(spark.table(table)
       .dropDuplicates("band", "bucket", "id")
-      .repartition(buckets, col("band"), col("bucket"))
-      .localCheckpoint(true)
+      .repartition(buckets, col("band"), col("bucket")))
     graft.pipeline.Warehouse.writeBucketed(rows, table, Seq("band", "bucket"), buckets)
+    Checkpoints.release(rows)
     val kept = Seq("shingleN", "numHashes", "bands")
       .flatMap(k => props.get(s"graft.lsh.$k").map(v => s"'graft.lsh.$k'='$v'"))
     if (kept.nonEmpty)
@@ -804,17 +804,17 @@ object Dedup {
     //  2. The token table feeds SIX plan branches (df, ranks, sizes,
     //     both candidate sides, both verify sides); without a barrier
     //     each branch re-runs the caller's set expression over the
-    //     corpus (narrow lineage — no exchange to reuse). persist()
-    //     materializes the id+token table once (never the documents).
-    //     At fixture scale this measures neutral (stage-JIT dominates
-    //     a single run); at corpus scale six scans vs one
-    //     materialization is the difference that matters — same
-    //     shared-pass reasoning as the q104 LSH checkpoint, but
-    //     persist keeps lineage + stats so join-strategy estimation
-    //     still sees real sizes.
-    val toks = sets.select(col("id"), explode_outer(col("toks")).as("tok"))
-      .filter(col("tok").isNotNull)
-      .persist()
+    //     corpus (narrow lineage — no exchange to reuse). A LAZY
+    //     checkpoint materializes the id+token table once, in the
+    //     first job that reads it (never the documents). At fixture
+    //     scale this measures neutral (stage-JIT dominates a single
+    //     run); at corpus scale six scans vs one materialization is
+    //     the difference that matters — same shared-pass reasoning as
+    //     the q104 LSH checkpoint. An EAGER, measured checkpoint here
+    //     re-planned the token joins: q147 at sf0.1 read 125 MB of
+    //     shuffle instead of 13-16 MB and ran 8.2 s instead of 5.0 s.
+    val toks = Checkpoints(sets.select(col("id"), explode_outer(col("toks")).as("tok"))
+      .filter(col("tok").isNotNull), eager = false)
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     // Rank tokens per set with a WINDOW over the token table (fully
     // codegen'd sort) rather than collect_list + sort_array + explode

@@ -1,13 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-
-import scala.util.control.NonFatal
 
 /** Iterative graph algorithms as dataframe loops (the q121 k-means
   * discipline applied to link analysis). Spark has no built-in graph
@@ -84,8 +80,7 @@ object Graph {
     // do.
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val deg = Checkpoints(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val nTotal = deg.agg(count(lit(1)).as("n_nodes"))
     var ranks = deg.crossJoin(broadcast(nTotal))
       .select(col("src").as("node"), col("deg"),
@@ -127,9 +122,9 @@ object Graph {
     val scaleFp = 1000000000000L
     // r22 (VERDICT r21 #7): the seed-flagged degree table is read by
     // every superstep — checkpoint it ONCE (node-sized; the returned
-    // frame reads it, so it stays persisted — the kCore leak-accepted
-    // rule). The EDGE list deliberately stays LAZY, unlike the other
-    // iterative ops: PPR's 100 TB remedy is a src-bucketed edge table
+    // frame reads it until the query's release). The EDGE list
+    // deliberately stays LAZY, unlike the other iterative ops: PPR's
+    // 100 TB remedy is a src-bucketed edge table
     // whose scans make every superstep's edge join Exchange-free
     // (WarehouseSpec pins it), and an eager edge checkpoint would
     // erase that layout.
@@ -138,9 +133,8 @@ object Graph {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val sFlag = seeds.select(col("node")).filter(col("node").isNotNull)
       .distinct().withColumn("__seed", lit(1L))
-    val flagged = deg.join(sFlag, deg("src") === sFlag("node"), "left")
-      .select(col("src"), col("deg"), coalesce(col("__seed"), lit(0L)).as("__seed"))
-      .localCheckpoint()
+    val flagged = Checkpoints(deg.join(sFlag, deg("src") === sFlag("node"), "left")
+      .select(col("src"), col("deg"), coalesce(col("__seed"), lit(0L)).as("__seed")))
     val nSeeds = flagged.agg(sum(col("__seed")).as("n_seeds"))
     var ranks = flagged.crossJoin(broadcast(nSeeds))
       .select(col("src").as("node"), col("deg"), col("__seed"),
@@ -376,22 +370,19 @@ object Graph {
     // doubles per half-step and the edge join replays ~2^(2·iters)
     // times — invisible at the gated iterations=2, a trap at the
     // depths the Int parameter permits. kCore's discipline: eager
-    // localCheckpoint per half-step, release the superseded round's
-    // blocks; the FINAL pair stays persisted (the returned frame
-    // reads from it, same necessity as kCore's last round).
+    // checkpoint per half-step, release the superseded round's
+    // blocks; the returned frame reads the FINAL pair.
     var prevHraw: DataFrame = null
     for (it <- 1 to iterations) {
-      val araw = e.join(h, e("src") === h("node"))
-        .groupBy(col("dst")).agg(sum(col("h_fp")).as("raw"))
-        .localCheckpoint()
-      if (prevHraw != null) releaseCheckpoint(prevHraw)
+      val araw = Checkpoints(e.join(h, e("src") === h("node"))
+        .groupBy(col("dst")).agg(sum(col("h_fp")).as("raw")))
+      if (prevHraw != null) Checkpoints.release(prevHraw)
       a = araw.crossJoin(broadcast(araw.agg(sum(col("raw")).as("tot"))))
         .select(col("dst").as("node"),
           expr(s"(raw * ${scaleFp}L) div tot").as("a_fp"))
-      val hraw = e.join(a, e("dst") === a("node"))
-        .groupBy(col("src")).agg(sum(col("a_fp")).as("raw"))
-        .localCheckpoint()
-      if (it < iterations) releaseCheckpoint(araw)
+      val hraw = Checkpoints(e.join(a, e("dst") === a("node"))
+        .groupBy(col("src")).agg(sum(col("a_fp")).as("raw")))
+      if (it < iterations) Checkpoints.release(araw)
       h = hraw.crossJoin(broadcast(hraw.agg(sum(col("raw")).as("tot"))))
         .select(col("src").as("node"),
           expr(s"(raw * ${scaleFp}L) div tot").as("h_fp"))
@@ -421,7 +412,7 @@ object Graph {
     *
     * Scale shape per round: two semi joins broadcast the node-sized
     * kept set against the edge checkpoint, streamed unshuffled (the
-    * checkpoints carry measured sizes — `measured`), then one
+    * checkpoints carry measured sizes — `Checkpoints`), then one
     * map-side-combined degree shuffle on u. The edge checkpoint is
     * released on return; the returned frame reads the final table.
     *
@@ -429,9 +420,8 @@ object Graph {
     * degree (≥ k). */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    val e = measured(edges.select(col("u"), col("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .localCheckpoint())
+    val e = Checkpoints(edges.select(col("u"), col("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull))
     def degrees(es: DataFrame): DataFrame =
       es.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .select(col("u").as("node"), col("deg"))
@@ -442,7 +432,7 @@ object Graph {
       degrees(e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     core
   }
 
@@ -463,7 +453,7 @@ object Graph {
     *
     * Scale shape per round: the node-sized frontier is broadcast
     * against the edge checkpoint, streamed unshuffled (the
-    * checkpoints carry measured sizes — `measured`; a state over the
+    * checkpoints carry measured sizes — `Checkpoints`; a state over the
     * broadcast threshold plans a shuffled join), then one
     * map-side-combined min shuffle of the state. Rounds are bounded
     * by maxHops. The edge checkpoint is released on return; the
@@ -474,9 +464,8 @@ object Graph {
     * appear at 0. */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    val e = measured(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint())
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull))
     val dist = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
@@ -488,7 +477,7 @@ object Graph {
         .unionByName(s)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     dist
   }
 
@@ -514,7 +503,7 @@ object Graph {
     * min groupBy(node) — never a fan-out beyond |edges|. Rounds are
     * data-independent (caller-bounded), each round localCheckpoints
     * and releases its predecessor (kCore's discipline; the FINAL
-    * round's checkpoint backs the returned frame and stays). At
+    * round's checkpoint backs the returned frame). At
     * 100 TB, bucket edges on src (Warehouse.writeBucketed) and every
     * round's join is Exchange-free on the edge side. Early exit when
     * a round changes nothing — a pure optimization: converged rounds
@@ -535,15 +524,14 @@ object Graph {
     // today; a refactor that drops the eager checkpoint (or prunes w)
     // must keep the guard on an evaluated path; GraphSpec pins the
     // loud failure.
-    val e = edges.select(col("src"), col("dst"), col("w"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"), col("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("w").isNotNull)
       .select(col("src"), col("dst"),
         when(col("w") < 0, raise_error(lit(
           "sssp: negative edge weight (min-plus requires w >= 0)"))
           .cast("long"))
-          .otherwise(col("w")).as("w"))
-      .localCheckpoint()
+          .otherwise(col("w")).as("w")))
     // fixpoint witness: relaxation is MONOTONE — nodes are only added
     // and each node's dist only decreases — so unchanged (count, Σdist)
     // ⇔ nothing moved. One scalar aggregate per round instead of a
@@ -564,7 +552,7 @@ object Graph {
           .unionByName(relaxed)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     dist
   }
 
@@ -611,12 +599,11 @@ object Graph {
   def earliestArrival(edges: DataFrame, seeds: DataFrame, startT: Long,
                       rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
-    val e = edges.select(col("src"), col("dst"), col("t"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"), col("t"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("t").isNotNull)
       .groupBy(col("src"), col("dst"))
-      .agg(sort_array(collect_list(col("t"))).as("ts"))
-      .localCheckpoint()
+      .agg(sort_array(collect_list(col("t"))).as("ts")))
     val arr = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
@@ -632,7 +619,7 @@ object Graph {
           .unionByName(relaxed)
           .groupBy(col("node")).agg(min(col("arr")).as("arr"))
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     arr
   }
 
@@ -663,12 +650,11 @@ object Graph {
   def latestDeparture(edges: DataFrame, targets: DataFrame,
                       deadline: Long, rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
-    val e = edges.select(col("src"), col("dst"), col("t"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"), col("t"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("t").isNotNull)
       .groupBy(col("src"), col("dst"))
-      .agg(sort_array(collect_list(col("t"))).as("ts"))
-      .localCheckpoint()
+      .agg(sort_array(collect_list(col("t"))).as("ts")))
     val ld = fixpoint(
       targets.select(col("node")).filter(col("node").isNotNull)
         .distinct()
@@ -684,7 +670,7 @@ object Graph {
           .unionByName(relaxed)
           .groupBy(col("node")).agg(max(col("ld")).as("ld"))
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     ld
   }
 
@@ -733,14 +719,12 @@ object Graph {
   def fastestJourney(edges: DataFrame, seeds: DataFrame,
                      rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
-    val raw = edges.select(col("src"), col("dst"), col("t"))
+    val raw = Checkpoints(edges.select(col("src"), col("dst"), col("t"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("t").isNotNull)
-      .localCheckpoint()
-    val e = raw
+        col("t").isNotNull))
+    val e = Checkpoints(raw
       .groupBy(col("src"), col("dst"))
-      .agg(sort_array(collect_list(col("t"))).as("ts"))
-      .localCheckpoint()
+      .agg(sort_array(collect_list(col("t"))).as("ts")))
     val sd = seeds.select(col("node")).filter(col("node").isNotNull)
       .distinct()
     val f = fixpoint(
@@ -758,8 +742,8 @@ object Graph {
           .unionByName(relaxed)
           .groupBy(col("node"), col("dep")).agg(min(col("arr")).as("arr"))
     }.last
-    releaseCheckpoint(raw)
-    releaseCheckpoint(e)
+    Checkpoints.release(raw)
+    Checkpoints.release(e)
     // duration-minimal journey per node, deterministic tie-break —
     // a min-struct aggregate (the r18 louvainMove selection idiom)
     f.groupBy(col("node"))
@@ -801,12 +785,11 @@ object Graph {
   def shortestJourney(edges: DataFrame, seeds: DataFrame, startT: Long,
                       rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
-    val e = edges.select(col("src"), col("dst"), col("t"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"), col("t"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("t").isNotNull)
       .groupBy(col("src"), col("dst"))
-      .agg(sort_array(collect_list(col("t"))).as("ts"))
-      .localCheckpoint()
+      .agg(sort_array(collect_list(col("t"))).as("ts")))
     val f = fixpoint(
       seeds.select(col("node")).filter(col("node").isNotNull)
         .distinct()
@@ -823,7 +806,7 @@ object Graph {
           .groupBy(col("node"))
           .agg(min(col("hops")).as("hops"), min(col("arr")).as("arr"))
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     f
   }
 
@@ -878,10 +861,9 @@ object Graph {
                   deltaCap: Long = 100000000000L): DataFrame = {
     require(maxHops >= 1, "maxHops must be positive")
     require(scale >= 1L, "scale must be positive")
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val levels = fixpoint(
       sources.select(col("node")).filter(col("node").isNotNull)
         .distinct()
@@ -925,18 +907,17 @@ object Graph {
         .select(col("s"), col("node"),
           expr(s"(sig * (${scale}L + dw)) div sw").as("term"))
         .groupBy(col("s"), col("node")).agg(sum(col("term")).as("dl"))
-      val lvlD = levels(i).join(terms, Seq("s", "node"), "left")
+      val lvlD = Checkpoints(levels(i).join(terms, Seq("s", "node"), "left")
         .select(col("s"), col("node"), col("sig"),
-          coalesce(col("dl"), lit(0L)).as("dl"))
-        .localCheckpoint()
+          coalesce(col("dl"), lit(0L)).as("dl")))
       // levels(i) is superseded by lvlD (an eager checkpoint); only
       // levels.last stays — accPieces(0) reads it lazily
-      releaseCheckpoint(levels(i))
+      Checkpoints.release(levels(i))
       accPieces += lvlD.select(col("s"), col("node"), col("dl"))
       retained += lvlD
       deeper = lvlD
     }
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     settle(accPieces.reduce(_ unionByName _)
       .filter(col("node") =!= col("s"))
       .groupBy(col("node")).agg(sum(col("dl")).as("bc_scaled"))
@@ -1109,8 +1090,8 @@ object Graph {
     *   5. apply: labels ⟕ applied, coalesce.
     * Rounds are FIXED (caller-bounded, replayed verbatim by the
     * oracle); a round with no positive move is the identity in both
-    * engines. Labels localCheckpoint per round (kCore lifetime rule:
-    * the final round's checkpoint backs the returned frame).
+    * engines. Labels checkpoint per round (kCore's discipline: the
+    * final round's checkpoint backs the returned frame).
     *
     * Input: edges (src, dst) SYMMETRIZED, no self-loops (the
     * labelPropagate precondition); labels (node, label) covering
@@ -1162,12 +1143,11 @@ object Graph {
       edges.select(col("src"), col("dst"), col("w"))
         .filter(col("src").isNotNull && col("dst").isNotNull),
       sum(col("w")))
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("d")).localCheckpoint()
+    val deg = Checkpoints(e.groupBy(col("src").as("node"))
+      .agg(sum(col("w")).as("d")))
     // Σ w = Σij Aij = 2m (symmetrized non-loops + single loops)
     val m2 = if (eRow.isNullAt(0)) 0L else eRow.getLong(0)
-    var lbl = labels.select(col("node"), col("label").as("lab"))
-      .localCheckpoint()
+    var lbl = Checkpoints(labels.select(col("node"), col("label").as("lab")))
     for (_ <- 1 to rounds) {
       // k is read twice (neighbor-community gain + own-community
       // subtraction) and best twice (the dominant-selection explode) —
@@ -1216,13 +1196,12 @@ object Graph {
       // aggregate). Read twice by the dominant-selection explode —
       // the doubled subtree shares its Exchange (ReusedExchange), see
       // the round comment above.
-      val best = cand
+      val best = Checkpoints(cand
         .groupBy(col("node"))
         .agg(min(struct((-col("dq")).as("nd"), col("b"), col("a")))
           .as("mv"))
         .select(col("node"), col("mv.a").as("a"), col("mv.b").as("b"),
-          (-col("mv.nd")).as("dq"))
-        .localCheckpoint()
+          (-col("mv.nd")).as("dq")))
       val ex = best.select(col("a").as("comm"), col("node"), col("b"),
           col("dq"))
         .unionByName(best.select(col("b").as("comm"), col("node"),
@@ -1240,15 +1219,14 @@ object Graph {
         .agg(count(lit(1)).as("nwin"))
         .filter(col("nwin") === 2)
         .select(col("node"), col("b"))
-      val next = lbl.join(applied, Seq("node"), "left")
-        .select(col("node"), coalesce(col("b"), col("lab")).as("lab"))
-        .localCheckpoint()
-      releaseCheckpoint(best)
-      releaseCheckpoint(lbl)
+      val next = Checkpoints(lbl.join(applied, Seq("node"), "left")
+        .select(col("node"), coalesce(col("b"), col("lab")).as("lab")))
+      Checkpoints.release(best)
+      Checkpoints.release(lbl)
       lbl = next
     }
-    releaseCheckpoint(e)
-    releaseCheckpoint(deg)
+    Checkpoints.release(e)
+    Checkpoints.release(deg)
     lbl.select(col("node"), col("lab").as("label"))
   }
 
@@ -1300,9 +1278,8 @@ object Graph {
     * Scale: level L's move runs on a graph whose node count is level
     * L−1's COMMUNITY count — cost collapses geometrically past level
     * 1 (why Blondel et al. report near-linear behavior on billion-
-    * edge graphs). Per-level localCheckpoint + release; every
-    * RETURNED frame is backed by its own checkpoint (caller owns
-    * their lifetime).
+    * edge graphs). Per-level checkpoint + release; every RETURNED
+    * frame is backed by its own checkpoint.
     *
     * Input: edges (src, dst, w) in louvainMove's convention
     * (symmetrized non-loops both directions, self-loops once).
@@ -1311,8 +1288,7 @@ object Graph {
   def louvainPyramid(edges: DataFrame, levels: Int,
                      moveRounds: Int): Seq[DataFrame] = {
     require(levels >= 1, "levels must be positive")
-    var cur = edges.select(col("src"), col("dst"), col("w"))
-      .localCheckpoint()
+    var cur = Checkpoints(edges.select(col("src"), col("dst"), col("w")))
     val out = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var stopped = false
     for (_ <- 1 to levels) {
@@ -1329,21 +1305,20 @@ object Graph {
         val anyMove = movedRow.getLong(0) > 0
         val expanded =
           if (out.isEmpty) moved
-          else out.last
+          else Checkpoints(out.last
             .join(moved.select(col("node").as("label"),
               col("label").as("l2")), Seq("label"))
-            .select(col("node"), col("l2").as("label"))
-            .localCheckpoint()
+            .select(col("node"), col("l2").as("label")))
         out += expanded
         if (anyMove) {
-          val nxt = louvainContract(cur, moved).localCheckpoint()
-          releaseCheckpoint(cur)
+          val nxt = Checkpoints(louvainContract(cur, moved))
+          Checkpoints.release(cur)
           cur = nxt
         } else stopped = true
-        if (!(expanded eq moved)) releaseCheckpoint(moved)
+        if (!(expanded eq moved)) Checkpoints.release(moved)
       }
     }
-    releaseCheckpoint(cur)
+    Checkpoints.release(cur)
     out.toSeq
   }
 
@@ -1370,9 +1345,8 @@ object Graph {
     * Scale shape per round: one frontier⋈edges equi-join + anti-join
     * against the settled set (the `bfs` kernel, vectorized over
     * sources) — map-side combine on (s, node); bucket edges on src
-    * at 100 TB. Per-round localCheckpoint; the per-round checkpoints
-    * are released once the final sum eager-checkpoints (one
-    * node-sized checkpoint outlives the call — the kCore rule).
+    * at 100 TB. Per-round checkpoint; the per-round checkpoints are
+    * released once the final sum eager-checkpoints (`settle`).
     *
     * Input: edges (src, dst) — directed rows, symmetrize for the
     * undirected metric; sources (node). Output: (node, hc_scaled)
@@ -1383,14 +1357,13 @@ object Graph {
                          scale: Long = 1000000L): DataFrame = {
     require(maxHops >= 1, "maxHops must be positive")
     require(scale >= 1L, "scale must be positive")
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val levels = sourceLevels(e, sources, maxHops)
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     if (levels.size == 1) {
-      releaseCheckpoint(levels.head)
+      Checkpoints.release(levels.head)
       // no source at all: empty (node, hc_scaled) frame
       emptyResult(edges, edges.schema("src").dataType, "hc_scaled")
     } else {
@@ -1442,10 +1415,9 @@ object Graph {
     *
     * Scale shape: the `bfs` kernel vectorized over sources — one
     * frontier⋈edges equi-join + DISTINCT + anti-join per round,
-    * state |S|×nodes. Per-round localCheckpoint; the per-round
+    * state |S|×nodes. Per-round checkpoint; the per-round
     * checkpoints are released once the final per-source aggregate
-    * eager-checkpoints (one |S|-sized checkpoint outlives the call);
-    * bucket edges on src at 100 TB.
+    * eager-checkpoints (`settle`); bucket edges on src at 100 TB.
     *
     * Input: edges (src, dst) — directed rows, symmetrize for the
     * undirected metric; sources (node). Output: (node, ecc,
@@ -1456,17 +1428,16 @@ object Graph {
   def eccentricity(edges: DataFrame, sources: DataFrame,
                    maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be positive")
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val levels = sourceLevels(e, sources, maxHops)
     // a source is exact iff its frontier died before the bound: no
     // (s, ·) row survives in the FINAL frontier.
     val unfinished = levels.last.select(col("s")).distinct()
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     if (levels.size == 1) {
-      releaseCheckpoint(levels.head)
+      Checkpoints.release(levels.head)
       emptyResult(edges, edges.schema("src").dataType,
         "ecc", "n_reached", "is_exact")
     } else {
@@ -1567,15 +1538,13 @@ object Graph {
     require(levelCap >= 1L && levels <= Long.MaxValue / levelCap,
       s"levels ($levels) * levelCap ($levelCap) must stay below 2^63: " +
         "the per-level cap bounds each term, this product bounds the sum")
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
-    var v = e.select(col("src").as("node"))
+      .distinct())
+    var v = Checkpoints(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .select(col("node"), lit(scale).as("v"))
-      .localCheckpoint()
+      .select(col("node"), lit(scale).as("v")))
     // r21 accumulator restructure (guide §1.2): the cross-level
     // accumulator used to re-checkpoint a
     // growing union + re-aggregate EVERY level; each level's vector is
@@ -1583,11 +1552,10 @@ object Graph {
     // now aggregates ONCE at the end over the lazy union of the level
     // checkpoints (exact Long sum — associative). r22 (VERDICT r21
     // #1): the sum is eager-checkpointed and the level checkpoints
-    // released — one node-sized checkpoint outlives the call instead
-    // of levels × |V| rows.
+    // released (`settle`).
     val lvls = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (_ <- 1 to levels) {
-      val nxt = v.join(e, col("node") === col("src"))
+      val nxt = Checkpoints(v.join(e, col("node") === col("src"))
         .groupBy(col("dst"))
         .agg(sum(col("v")).as("sv"))
         // integer `div`, NOT `/` (long / long is DOUBLE division in
@@ -1599,13 +1567,12 @@ object Graph {
           when(col("v") > levelCap, raise_error(lit(
             "katz: level value > cap - walk growth outruns the " +
               "attenuation; raise it or lower levels")).cast("long"))
-            .otherwise(col("v")).as("v"))
-        .localCheckpoint()
-      if (lvls.isEmpty) releaseCheckpoint(v) // the init vector only
+            .otherwise(col("v")).as("v")))
+      if (lvls.isEmpty) Checkpoints.release(v) // the init vector only
       v = nxt
       lvls += nxt
     }
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     settle(lvls.reduce(_ unionByName _)
       .groupBy(col("node")).agg(sum(col("v")).as("v"))
       .select(col("node"), col("v").as("katz_fp")), lvls)
@@ -1641,14 +1608,13 @@ object Graph {
   def deterministicWalks(edges: DataFrame, length: Int,
                          salt: String = "dw:"): DataFrame = {
     require(length >= 1, "length must be positive")
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // the loop fully materializes every step before returning, so the
     // edge checkpoint can be released here
     val out = deterministicWalksPrepared(e, length, salt)
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     out
   }
 
@@ -1670,11 +1636,10 @@ object Graph {
     // path is unaffected; the DISTINCT precondition stays caller-
     // owned (min-argmin is idempotent under duplicates anyway).
     val e = eRaw.filter(col("src").isNotNull && col("dst").isNotNull)
-    val starts = e.select(col("src").as("node"))
+    val starts = Checkpoints(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .select(col("node").as("start"), col("node"))
-      .localCheckpoint()
+      .select(col("node").as("start"), col("node")))
     // r21 accumulator restructure (guide §1.2): the walk table used to
     // re-checkpoint the GROWING (start, step, node) union every step —
     // O(length²) copied rows and one extra materialization job per
@@ -1682,13 +1647,13 @@ object Graph {
     // join, so the output is the LAZY union of per-step selects over
     // those checkpoints. r22 (VERDICT r21 #1): the union is
     // eager-checkpointed ONCE (a single output-sized copy) and the
-    // per-step checkpoints released — bounded retention, kCore rule.
+    // per-step checkpoints released (`settle`).
     val pieces = scala.collection.mutable.ArrayBuffer[DataFrame](
       starts.select(col("start"), lit(0L).as("step"), col("node")))
     val retained = scala.collection.mutable.ArrayBuffer[DataFrame](starts)
     var cur = starts
     for (i <- 1 to length) {
-      val nxt = cur.join(e, col("node") === col("src"))
+      val nxt = Checkpoints(cur.join(e, col("node") === col("src"))
         .select(col("start"),
           struct(
             md5(concat(lit(salt), col("start").cast("string"), lit(":"),
@@ -1696,8 +1661,7 @@ object Graph {
               .as("coin"),
             col("dst")).as("cd"))
         .groupBy(col("start")).agg(min(col("cd")).as("cd"))
-        .select(col("start"), col("cd.dst").as("node"))
-        .localCheckpoint()
+        .select(col("start"), col("cd.dst").as("node")))
       cur = nxt
       pieces += nxt.select(col("start"), lit(i.toLong).as("step"),
         col("node"))
@@ -1784,11 +1748,10 @@ object Graph {
            salt: String = "mis:"): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
     val prio = md5(concat(lit(salt), col("node").cast("string")))
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // The live set already excludes every PRIOR round's decided nodes,
     // so the shrink anti-join only needs THIS round's joiners ∪
     // removed — the decided set is assembled once at the end as the
@@ -1806,28 +1769,26 @@ object Graph {
         .select(col("dst").as("node"), col("p"))
         .join(live.select(col("node")), Seq("node"), "left_semi")
         .groupBy(col("node")).agg(min(col("p")).as("np"))
-      val joiners = live.join(nbrMin, Seq("node"), "left")
+      val joiners = Checkpoints(live.join(nbrMin, Seq("node"), "left")
         .filter(col("np").isNull || col("p") < col("np"))
         .select(col("node"), lit("mis").as("status"),
-          lit(i.toLong).as("round"))
-        .localCheckpoint()
+          lit(i.toLong).as("round")))
       pieces += joiners
       // a joiner is never adjacent to a joiner (the smaller priority
       // would have blocked the other), so removed ∩ joiners = ∅ by
       // construction — no anti-join needed
-      val removed = joiners.join(e, col("node") === col("src"))
+      val removed = Checkpoints(joiners.join(e, col("node") === col("src"))
         .select(col("dst").as("node"))
         .distinct()
         .join(live.select(col("node")), Seq("node"), "left_semi")
         .select(col("node"), lit("removed").as("status"),
-          lit(i.toLong).as("round"))
-        .localCheckpoint()
+          lit(i.toLong).as("round")))
       pieces += removed
       live.join(joiners.select(col("node"))
         .unionByName(removed.select(col("node"))),
         Seq("node"), "left_anti")
     }.last
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     settle((pieces :+ live.select(col("node"), lit("live").as("status"),
       lit(0L).as("round")))
       .reduce(_ unionByName _), pieces :+ live)
@@ -1865,16 +1826,14 @@ object Graph {
   def articulation(edges: DataFrame, candidates: DataFrame,
                    maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be positive")
-    val e = edges.select(col("src"), col("dst"))
+    val e = Checkpoints(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val cands = candidates.select(col("node").as("cand")).distinct()
-    val nbrs = cands.join(e, col("cand") === col("src"))
+    val nbrs = Checkpoints(cands.join(e, col("cand") === col("src"))
       .select(col("cand"), col("dst").as("nbr"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val nCounts = nbrs.groupBy(col("cand"))
       .agg(count(lit(1)).as("n_neighbors"))
     val levels = fixpoint(
@@ -1895,7 +1854,7 @@ object Graph {
         .select(col("cand"), col("node").as("nbr")),
         Seq("cand", "nbr"), "left_semi")
       .groupBy(col("cand")).agg(count(lit(1)).as("n_reached"))
-    releaseCheckpoint(e)
+    Checkpoints.release(e)
     settle(nCounts
       .join(reached, Seq("cand"), "left")
       .join(unfinished, Seq("cand"), "left")
@@ -1939,15 +1898,14 @@ object Graph {
     * Input: directed edges (u, v), u ≠ v (duplicates tolerated).
     * Output: (triad_class, n) — one row per REALIZED class. */
   def triadCensus(edges: DataFrame): DataFrame = {
-    val de = edges.select(col("u"), col("v"))
+    val de = Checkpoints(edges.select(col("u"), col("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val und = de.select(least(col("u"), col("v")).as("x"),
         greatest(col("u"), col("v")).as("y"))
       .distinct()
-    val ps = und
+    val ps = Checkpoints(und
       .join(de.select(col("u").as("x"), col("v").as("y"),
         lit(1).as("fwd")), Seq("x", "y"), "left")
       .join(de.select(col("v").as("x"), col("u").as("y"),
@@ -1955,8 +1913,7 @@ object Graph {
       .select(col("x"), col("y"),
         when(col("fwd").isNotNull && col("rev").isNotNull, lit("bi"))
           .when(col("fwd").isNotNull, lit("f"))
-          .otherwise(lit("r")).as("st"))
-      .localCheckpoint()
+          .otherwise(lit("r")).as("st")))
     val e1 = ps.select(col("x").as("u"), col("y").as("v"),
       col("st").as("s_uv"))
     val e2 = ps.select(col("x").as("v"), col("y").as("w"),
@@ -1997,11 +1954,10 @@ object Graph {
           .when(col("s_uv") === "r" && col("s_uw") === "r",
             lit("120_out"))
           .otherwise(lit("120_mixed")))
-    val out = tri.select(cls.as("triad_class"))
-      .groupBy(col("triad_class")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    releaseCheckpoint(ps)
-    releaseCheckpoint(de)
+    val out = Checkpoints(tri.select(cls.as("triad_class"))
+      .groupBy(col("triad_class")).agg(count(lit(1)).as("n")))
+    Checkpoints.release(ps)
+    Checkpoints.release(de)
     out
   }
 
@@ -2025,13 +1981,13 @@ object Graph {
     *    bounded-hop/bounded-round ops), or throws
     *    IllegalStateException(`capError`) when one is given;
     *  - retention: by default each superseded round's checkpoint is
-    *    released as soon as the next one has materialized, so exactly
-    *    the final round's checkpoint outlives the call (the returned
-    *    frame reads from it). With `keepRounds` every round is held:
-    *    the level-synchronous centrality traversals anti-join against
-    *    the union of their levels and read them all after the loop;
-    *    they release them through `settle`. Every round's checkpoint
-    *    carries its measured size (`measured`).
+    *    released as soon as the next one has materialized, so only the
+    *    final round's checkpoint outlives the call (the returned frame
+    *    reads from it; the query's release frees it). With
+    *    `keepRounds` every round is held: the level-synchronous
+    *    centrality traversals anti-join against the union of their
+    *    levels and read them all after the loop; they release them
+    *    through `settle`.
     *
     * `step(held, r)` builds round r (1-based) from the held rounds —
     * all of them with `keepRounds`, else only the current state;
@@ -2053,7 +2009,7 @@ object Graph {
       done = stop(Some(prev), w)
       prev = w
       if (keepRounds) held :+= next
-      else { releaseCheckpoint(held.last); held = Vector(next) }
+      else { Checkpoints.release(held.last); held = Vector(next) }
     }
     if (!done) capError.foreach(msg => throw new IllegalStateException(msg))
     held
@@ -2063,21 +2019,15 @@ object Graph {
   private val noneLeft: (Option[Row], Row) => Boolean =
     (_, cur) => cur.getLong(0) == 0L
 
-  /** Bound an iterative op's retained storage (VERDICT r21 #1): take
-    * ONE eager localCheckpoint of the final reduced frame — a single
-    * output-sized copy, with its measured size (`measured`) — then
-    * release every per-round level checkpoint it was derived from.
-    * The r21 lazy-union form kept ALL level checkpoints persisted for
-    * the life of the returned frame (O(rounds × state) blocks,
-    * unreleasable by callers); here, per call, exactly the
-    * output-sized final checkpoint stays, and it is a top-level
-    * LogicalRDD a caller CAN release. Recomputation-safe on a real
-    * cluster too — the result no longer lazily depends on blocks that
-    * die with their executor. */
+  /** Bound an iterative op's peak storage: take ONE eager checkpoint
+    * of the final reduced frame, an output-sized copy, then release
+    * every per-round level checkpoint it was derived from, so the rest
+    * of the query runs without O(rounds × state) blocks held. The
+    * output checkpoint is the query's (`Checkpoints`). */
   private def settle(out: DataFrame,
                      retained: Iterable[DataFrame]): DataFrame = {
-    val res = measured(out.localCheckpoint()) // eager: materializes before release
-    retained.foreach(releaseCheckpoint)
+    val res = Checkpoints(out) // eager: materializes before release
+    retained.foreach(Checkpoints.release)
     res
   }
 
@@ -2092,13 +2042,11 @@ object Graph {
     * miss falls back to an explicit aggregate over the (already
     * materialized, node-sized) checkpoint — one extra cheap job,
     * never a hang, values identical (deterministic aggregates over
-    * the same materialized rows). The checkpoint carries its measured
-    * size (`measured`). */
+    * the same materialized rows). */
   private[graft] def observedCheckpoint(df: DataFrame, metrics: Column*)
       : (DataFrame, org.apache.spark.sql.Row) = {
     val obs = org.apache.spark.sql.Observation()
-    val ckpt = measured(df.observe(obs, metrics.head, metrics.tail: _*)
-      .localCheckpoint(true))
+    val ckpt = Checkpoints(df.observe(obs, metrics.head, metrics.tail: _*))
     val row =
       try scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(10, "s"))
@@ -2107,30 +2055,4 @@ object Graph {
       }
     (ckpt, row)
   }
-
-  /** A materialized checkpoint planned from its MEASURED size: the
-    * bytes the block manager holds for its blocks replace Spark's
-    * estimate of the producing plan, which without CBO multiplies a
-    * join's input sizes — a small round state looked huge, so joins
-    * against it shuffled both sides (SCALE.md, optimizer traps).
-    * Blocks are stored deserialized, so this over-counts: the broadcast
-    * threshold still decides, and errs toward the shuffled join. */
-  private def measured(ckpt: DataFrame): DataFrame =
-    ckpt.queryExecution.logical match {
-      case lr: LogicalRDD =>
-        GraftSql.storedBytes(lr.rdd.id).fold(ckpt)(bytes =>
-          GraftSql.withStats(ckpt, lr, Statistics(sizeInBytes = bytes)))
-      case _ => ckpt
-    }
-
-  /** Free a localCheckpoint's block-manager storage (best-effort):
-    * the checkpointed RDD sits behind the LogicalRDD node the
-    * checkpoint call returned; Dataset.unpersist only covers
-    * CacheManager entries and would silently leak it. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.logical match {
-      case lr: LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    } catch { case NonFatal(_) => () }
 }

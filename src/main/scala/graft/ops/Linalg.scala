@@ -42,9 +42,8 @@ object Linalg {
     * all-ones vector (a fixed start almost surely non-orthogonal to
     * the principal axis — and deterministic, unlike random init).
     *
-    * The corpus pass is localCheckpointed (one scan feeds every
-    * iteration AND the returned frame — the ccStar r15 lifetime rule:
-    * the final reader keeps it persisted; leak accepted like kCore).
+    * The corpus pass is checkpointed (one scan feeds every iteration
+    * AND the returned frame; the query's release frees it).
     *
     * Input: vecs with an id column and an array<float> column.
     * Output: (pos: Long 0-based dim, loading_k: Long — the iterate in
@@ -71,7 +70,7 @@ object Linalg {
   def topComponent(vecs: DataFrame, idCol: String, vecCol: String,
                    iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val m = gram(vecs, vecCol).localCheckpoint(true)
+    val m = Checkpoints(gram(vecs, vecCol))
     var v = m.select(col("i")).distinct()
       .select(col("i").as("j"), lit(1000L).as("vj"))
     for (_ <- 1 to iters) {

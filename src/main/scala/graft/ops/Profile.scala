@@ -266,7 +266,7 @@ object Profile {
     * partition on the order key, per-partition prefix sums, then add
     * each partition's broadcast start offset.
     *
-    * The localCheckpoint is REQUIRED for correctness, not an
+    * The checkpoint is REQUIRED for correctness, not an
     * optimization: `ranged` feeds TWO subtrees (the offsets aggregate
     * and the join input), and Spark's range exchange draws its
     * partition boundaries from a RANDOM-SEED sample per evaluated
@@ -278,13 +278,12 @@ object Profile {
     * ProfileSpec's equality test had only ever exercised the
     * exchange-reuse path. Materializing the ranged frame once pins
     * one set of boundaries for both consumers (the Dedup iterative-
-    * pass discipline; blocks reclaimed by the ContextCleaner). */
+    * pass discipline). */
   def runningTotalByRange(df: DataFrame, orderCol: String, valueCol: String,
                           partitions: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ranged = df.repartitionByRange(partitions, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Checkpoints(df.repartitionByRange(partitions, col(orderCol))
+      .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy("__pid").agg(sum(col(valueCol)).as("__ptot"))
       .withColumn("__off", coalesce(sum(col("__ptot")).over(
         Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)),

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import scala.util.control.NonFatal
-
 /** Sampling and dataset-splitting operators for training-data
   * pipelines: deterministic content-hash splits (train/eval membership
   * must be a pure function of the example, never of row order,
@@ -348,7 +346,7 @@ object Sampling {
     *   1. range-partitions on the sort key (Spark samples boundaries
     *      internally — a per-partition reservoir + merge, bounded
     *      driver state),
-    *   2. localCheckpoints the ranged frame — REQUIRED, not an
+    *   2. checkpoints the ranged frame — REQUIRED, not an
     *      optimization: the range exchange draws boundaries from a
     *      random-seed sample per evaluated exchange, and the counts
     *      branch and the rank branch must see the SAME boundaries
@@ -367,9 +365,8 @@ object Sampling {
                     partitions: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(sortCols.nonEmpty, "sortCols must be non-empty")
-    val ranged = track(df.repartitionByRange(partitions, sortCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true))
+    val ranged = Checkpoints(df.repartitionByRange(partitions, sortCols.map(col): _*)
+      .withColumn("__pid", spark_partition_id()))
     val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("__pn"))
     val offsets = counts
       .join(broadcast(counts.select(col("__pid").as("__q"),
@@ -383,36 +380,9 @@ object Sampling {
       .drop("__pid", "__off")
   }
 
-  /** rankedByRange's eager localCheckpoints outlive Dataset.unpersist
-    * (the blocks belong to the RDD behind the LogicalRDD leaf, not the
-    * CacheManager — Graph.kCore's release discipline), so each call
-    * registers its checkpoint here and the DRIVER LOOP frees them:
-    * Verify after each query's parquet lands, Bench after each timed
-    * noop write. Contract: call only once every frame returned since
-    * the last release has been FULLY materialized — the checkpoint
-    * truncated the lineage, so a released frame cannot be recomputed. */
-  private val trackedCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-
-  private def track(df: DataFrame): DataFrame = {
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        trackedCheckpoints.add(lr.rdd)
-      case _ => ()
-    }
-    df
-  }
-
-  /** Free every tracked checkpoint's block-manager storage
-    * (best-effort, non-blocking). See trackedCheckpoints contract. */
-  def releaseCheckpoints(): Unit = {
-    var rdd = trackedCheckpoints.poll()
-    while (rdd != null) {
-      try rdd.unpersist(blocking = false)
-      catch { case NonFatal(_) => () }
-      rdd = trackedCheckpoints.poll()
-    }
-  }
+  /** `Checkpoints.releaseQuery()`, under the name perfbench's runner
+    * calls after each query. */
+  def releaseCheckpoints(): Unit = Checkpoints.releaseQuery()
 
   /** Exact ntile(k) over a TOTAL order with NO single-partition
     * WindowExec: global rank via rankedByRange, then ntile's

@@ -1533,23 +1533,19 @@ object AggQueries {
     * "reuse a partitioning across stages" discipline: one sorted
     * materialization amortizes over every quantile-shaped question
     * asked of the same order, exactly how a production pipeline
-    * treats an expensive global sort. Memoized per (application,
-    * fixture dir), like the q134/q143 sketch tables. */
-  private val rankedPrices = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.DataFrame]
+    * treats an expensive global sort. A session memo
+    * (`Checkpoints.shared`): the range checkpoint stays with it. */
   private def rankedPriceFrame(s: org.apache.spark.sql.SparkSession,
                                dir: String): org.apache.spark.sql.DataFrame =
-    rankedPrices.synchronized {
-      rankedPrices.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-        val rows = Tables.lineitem(s, dir)
-          .select(col("l_returnflag"), col("l_orderkey"),
-            col("l_linenumber"),
-            round(col("l_extendedprice"), 2).cast("decimal(18,2)").as("p"))
-          .withColumn("ok", struct(col("l_returnflag"), col("p"),
-            col("l_orderkey"), col("l_linenumber")))
-          .withColumn("one", lit(1L))
-        graft.ops.Profile.runningTotalByRange(rows, "ok", "one", 32)
-          .withColumnRenamed("running_total", "rn")
-      })
+    graft.ops.Checkpoints.shared(s, dir, "rankedPrices") {
+      val rows = Tables.lineitem(s, dir)
+        .select(col("l_returnflag"), col("l_orderkey"),
+          col("l_linenumber"),
+          round(col("l_extendedprice"), 2).cast("decimal(18,2)").as("p"))
+        .withColumn("ok", struct(col("l_returnflag"), col("p"),
+          col("l_orderkey"), col("l_linenumber")))
+        .withColumn("one", lit(1L))
+      graft.ops.Profile.runningTotalByRange(rows, "ok", "one", 32)
+        .withColumnRenamed("running_total", "rn")
     }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.ops.Checkpoints
 import graft.stream.Events
 import org.apache.spark.sql.DataFrame
 
@@ -387,12 +388,11 @@ object EventQueries {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
       val wrn = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val ev = Tables.events(s, dir)
+      val ev = Checkpoints(Tables.events(s, dir)
         .withColumn("rn", row_number().over(wrn))
         .filter(col("rn") <= 8)
         .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("t"))
-        .localCheckpoint()
+          unix_micros(col("ts")).as("t")))
       val firstA = ev.groupBy(col("user_id"), col("event_type").as("a"))
         .agg(min(col("t")).as("t1"))
       val firstAB = firstA
@@ -540,13 +540,12 @@ object EventQueries {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val counted = Tables.events(s, dir)
+      val counted = Checkpoints(Tables.events(s, dir)
         .withColumn("dst_type", lead("event_type", 1).over(w))
         .filter(col("dst_type").isNotNull)
         .select(col("event_type").as("src_type"), col("dst_type"))
         .groupBy("src_type", "dst_type")
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n")))
       val tot = counted.groupBy(col("src_type"))
         .agg(sum(col("n")).as("tot"))
       val m = counted.join(tot, Seq("src_type"))

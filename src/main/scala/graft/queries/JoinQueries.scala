@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.ops.Checkpoints
 import org.apache.spark.sql.functions._
 
 /** Join operators (SURVEY.md §2B "Joins"): equi inner/left/full,
@@ -534,11 +535,9 @@ object JoinQueries {
       // the DERIVED edge list (scan+join+distinct) is re-read by every
       // superstep — checkpoint it once at the call site (r22, VERDICT
       // r21 #7; the op stays bucketing-transparent, so a bucketed
-      // caller's layout survives). Leak-accepted edge-bounded frame,
-      // the q363 discipline.
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
-        .localCheckpoint()
+      // caller's layout survives).
+      val edges = Checkpoints(eb.select(col("c").as("src"), col("s1").as("dst"))
+        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"))))
       graft.ops.Graph.pageRank(edges, iterations = 3)
         .orderBy("node")
     }),
@@ -552,17 +551,16 @@ object JoinQueries {
     // fixed-point normalization per half-step — the whole mutual
     // recursion hash-matches the unrolled DuckDB replay.
     "q297_hits" -> ((s, dir) => {
-      val edges = Tables.lineitem(s, dir)
+      // derived edge build read by all four half-step joins —
+      // checkpoint at the call site (r22, VERDICT r21 #7; the q163
+      // comment)
+      val edges = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-        // derived edge build read by all four half-step joins —
-        // checkpoint at the call site (r22, VERDICT r21 #7; the q163
-        // comment)
-        .localCheckpoint()
+        .distinct())
       graft.ops.Graph.hits(edges, iterations = 2)
         .orderBy("node")
     }),
@@ -618,11 +616,10 @@ object JoinQueries {
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
         .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
-        // derived edge build read by every superstep — checkpoint at
-        // the call site (r22, VERDICT r21 #7; the q163 comment)
-        .localCheckpoint()
+      // derived edge build read by every superstep — checkpoint at
+      // the call site (r22, VERDICT r21 #7; the q163 comment)
+      val edges = Checkpoints(eb.select(col("c").as("src"), col("s1").as("dst"))
+        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"))))
       val seeds = Tables.supplier(s, dir)
         .join(Tables.nation(s, dir), col("s_nationkey") === col("n_nationkey"))
         .join(Tables.region(s, dir), col("n_regionkey") === col("r_regionkey"))
@@ -981,25 +978,21 @@ object JoinQueries {
       // both Q computations) — checkpoint once so labelPropagate and
       // the base trade-graph join don't replay per consumer (they
       // did: 27 s isolated at sf0.1 before, the q365 lazy-chain
-      // lesson applied here too). Leak-accepted node/edge-bounded
-      // frames, the kCore rule.
-      val eb = Tables.lineitem(s, dir)
+      // lesson applied here too).
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .filter(col("l_quantity") === 1)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
-      val init = graft.ops.Graph.labelPropagate(edges, supersteps = 3)
-        .localCheckpoint()
+      val init = Checkpoints(graft.ops.Graph.labelPropagate(edges, supersteps = 3))
       val refined = graft.ops.Graph.louvainRefine(edges, init, rounds = 2)
-      val deg = edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("d"))
-        .localCheckpoint()
+      val deg = Checkpoints(edges.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("d")))
       def qOf(l: org.apache.spark.sql.DataFrame) = {
         val mE = eb
           .join(l.select(col("node").as("c"), col("label").as("lc")),
@@ -1043,15 +1036,14 @@ object JoinQueries {
     "q367_louvain_level2" -> ((s, dir) => {
       // same base graph, init, and level-1 refinement as q363 (the
       // pyramid's lower rung is shared machinery, not a re-derivation)
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .filter(col("l_quantity") === 1)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       val init = graft.ops.Graph.labelPropagate(edges, supersteps = 3)
@@ -1061,23 +1053,20 @@ object JoinQueries {
       // lives; with two level-1 rounds the sf0.001 super-graph was
       // already merge-optimal and level 2 was the identity (vacuous —
       // caught by inspection, the q366 lesson)
-      val lvl1 = graft.ops.Graph.louvainRefine(edges, init, rounds = 1)
-        .localCheckpoint()
+      val lvl1 = Checkpoints(graft.ops.Graph.louvainRefine(edges, init, rounds = 1))
       // contract to the weighted super-graph and re-run the move
       // phase with each community starting as its own super-community
-      val sup = graft.ops.Graph.louvainContract(
-        edges.withColumn("w", lit(1L)), lvl1).localCheckpoint()
+      val sup = Checkpoints(graft.ops.Graph.louvainContract(
+        edges.withColumn("w", lit(1L)), lvl1))
       val supInit = sup.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("label"))
       val moved = graft.ops.Graph.louvainMove(sup, supInit, rounds = 2)
-      val lvl2 = lvl1
+      val lvl2 = Checkpoints(lvl1
         .join(moved.select(col("label").as("l2"), col("node").as("label")),
           Seq("label"))
-        .select(col("node"), col("l2").as("label"))
-        .localCheckpoint()
-      val deg = edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("d"))
-        .localCheckpoint()
+        .select(col("node"), col("l2").as("label")))
+      val deg = Checkpoints(edges.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("d")))
       def qOf(l: org.apache.spark.sql.DataFrame) = {
         val mE = eb
           .join(l.select(col("node").as("c"), col("label").as("lc")),
@@ -1119,23 +1108,21 @@ object JoinQueries {
     // louvainMove's one-join-one-groupBy round on the full edge list;
     // every later level runs on a community-counted graph.
     "q370_louvain_pyramid" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .filter(col("l_quantity") === 1)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
         .withColumn("w", lit(1L))
       val lv = graft.ops.Graph.louvainPyramid(edges, levels = 3,
         moveRounds = 1)
-      val deg = edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("d"))
-        .localCheckpoint()
+      val deg = Checkpoints(edges.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("d")))
       def qOf(l: org.apache.spark.sql.DataFrame) = {
         val mE = eb
           .join(l.select(col("node").as("c"), col("label").as("lc")),
@@ -1175,7 +1162,8 @@ object JoinQueries {
     // STRICTLY LATER than the unconstrained min-timestamp decoration
     // would claim (their early edges run backward in time).
     "q364_temporal_reach" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      // two consumers (edge build + seed min) — checkpoint once
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"),
           col("o_custkey"), col("o_orderdate")),
@@ -1185,9 +1173,7 @@ object JoinQueries {
           (year(col("o_orderdate")) * 10000 +
             month(col("o_orderdate")) * 100 +
             dayofmonth(col("o_orderdate"))).cast("long").as("t"))
-        .distinct()
-        // two consumers (edge build + seed min) — checkpoint once
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
           col("t"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
@@ -1216,7 +1202,7 @@ object JoinQueries {
     // claim a later departure hold a strictly earlier ld (their late
     // edges lead only to nodes already past their own departure).
     "q368_latest_departure" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"),
           col("o_custkey"), col("o_orderdate")),
@@ -1226,8 +1212,7 @@ object JoinQueries {
           (year(col("o_orderdate")) * 10000 +
             month(col("o_orderdate")) * 100 +
             dayofmonth(col("o_orderdate"))).cast("long").as("t"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
           col("t"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
@@ -1258,7 +1243,7 @@ object JoinQueries {
     // earliest-departure stratum's transit to the same node outright
     // (141 of 160 at sf0.001, likewise all strict wins).
     "q369_fastest_journey" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"),
           col("o_custkey"), col("o_orderdate")),
@@ -1267,8 +1252,7 @@ object JoinQueries {
           (col("l_suppkey") * 2 + 1).as("s1"),
           datediff(col("o_orderdate"), lit("1970-01-01"))
             .cast("long").as("t"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
           col("t"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
@@ -1298,14 +1282,13 @@ object JoinQueries {
     // δ spreads over >4 decades — the quantization is exercised far
     // from its truncation floor.
     "q371_betweenness" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       val srcs = eb.select(col("c").as("node")).distinct()
@@ -1337,7 +1320,7 @@ object JoinQueries {
     // witness. Output also carries the earliest ≤5-hop arrival (the
     // q364 decoration riding the same groupBy).
     "q372_shortest_journey" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"),
           col("o_custkey"), col("o_orderdate")),
@@ -1347,8 +1330,7 @@ object JoinQueries {
           (year(col("o_orderdate")) * 10000 +
             month(col("o_orderdate")) * 100 +
             dayofmonth(col("o_orderdate"))).cast("long").as("t"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
           col("t"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
@@ -1378,14 +1360,13 @@ object JoinQueries {
     // four distance classes realized, so every quantized 1/d constant
     // reaches the hash).
     "q373_harmonic" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       val srcs = eb.select(col("c").as("node")).distinct()
@@ -1426,13 +1407,12 @@ object JoinQueries {
     "q374_reciprocity" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
-      val e = li.as("a").join(li.as("b"),
+      val e = Checkpoints(li.as("a").join(li.as("b"),
           col("a.l_orderkey") === col("b.l_orderkey") &&
             col("a.l_linenumber") < col("b.l_linenumber") &&
             col("a.l_partkey") =!= col("b.l_partkey"))
         .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val recip = e.join(e.select(col("v").as("u"), col("u").as("v")),
         Seq("u", "v"), "left_semi")
       val nodes = e.select(col("u").as("node"))
@@ -1508,14 +1488,13 @@ object JoinQueries {
     // at ecc 4), so the exhaustion and lower-bound branches both
     // reach the hash; GraphSpec pins both branches by hand as well.
     "q376_eccentricity" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       val srcs = eb.select(col("c").as("node")).distinct()
@@ -1548,15 +1527,14 @@ object JoinQueries {
     // positive — the honesty flag genuinely fires on the fixture,
     // not just in the spec).
     "q389_articulation" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .filter(col("l_quantity") === 1)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       def side(c: org.apache.spark.sql.Column, tag: String) =
@@ -1583,14 +1561,13 @@ object JoinQueries {
     // signal) and every walk reaches full length (the symmetrized
     // graph has no sink; the sink-stop branch is spec-pinned).
     "q387_walk_corpus" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       graft.ops.Graph.deterministicWalks(edges, length = 5)
@@ -1649,14 +1626,13 @@ object JoinQueries {
     // walk mass genuinely re-ranks instead of rescaling degree; Katz
     // is measurably NOT a degree/PageRank monotone on this fixture.
     "q381_katz" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
+      val eb = Checkpoints(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"),
           (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
         .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
       graft.ops.Graph.katz(edges, levels = 4).orderBy("node")
@@ -1754,22 +1730,19 @@ object JoinQueries {
           .select(col("u"), col("v"),
             coalesce(col("sup"), lit(0L)).as("sup"))
       }
-      // each peel round localCheckpoints (the ccStar lineage rule —
+      // each peel round checkpoints (the ccStar lineage rule —
       // without it round r recomputes rounds 1..r−1 and support()
       // references its input three times, so the lazy chain re-ran
       // the base wedge join ~3⁴ times: 413 s at sf0.1, measured).
-      // Checkpoints are edge-bounded (≤ ~100k × 2 longs) and
-      // leak-accepted like kCore's: the final round's backs the
-      // returned frame.
-      var e = ib.as("a").join(ib.as("b"),
+      // Checkpoints are edge-bounded (≤ ~100k × 2 longs); the final
+      // round's backs the returned frame.
+      var e = Checkpoints(ib.as("a").join(ib.as("b"),
           col("a.l_orderkey") === col("b.l_orderkey") &&
             col("a.l_partkey") < col("b.l_partkey"))
         .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       for (_ <- 1 to 3)
-        e = support(e).filter(col("sup") >= 4).select(col("u"), col("v"))
-          .localCheckpoint()
+        e = Checkpoints(support(e).filter(col("sup") >= 4).select(col("u"), col("v")))
       support(e).orderBy("u", "v")
     }),
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -155,11 +156,11 @@ object StatQueries {
         .agg(count(lit(1)).as("nij"),
           sum(when(col("winner") < col("loser"), 1L).otherwise(0L)).as("wi"))
       // directed view: one row per (player, opponent, games, wins-of-player)
-      val dirEdges = games.select(col("i").as("p"), col("j").as("o"),
+      // tiny (≤ brands² rows); reused 2×2 times
+      val dirEdges = Checkpoints(games.select(col("i").as("p"), col("j").as("o"),
           col("nij"), col("wi").as("w"))
         .union(games.select(col("j").as("p"), col("i").as("o"),
-          col("nij"), (col("nij") - col("wi")).as("w")))
-        .localCheckpoint() // tiny (≤ brands² rows); reused 2×2 times
+          col("nij"), (col("nij") - col("wi")).as("w"))))
       val totals = dirEdges.groupBy("p").agg(
         sum("w").as("wins"), sum("nij").as("games"))
       val nPlayers = lit(25.0)
@@ -383,13 +384,13 @@ object StatQueries {
     // 5th/195th order statistics of 199 means (the classic 2.5%/97.5%
     // type-1 picks).
     "q269_bootstrap_ci" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
+      // tiny (day-cardinality); reused by grid+join
+      val daily = Checkpoints(Tables.events(s, dir)
         .filter(col("event_type") === "purchase" && col("value").isNotNull)
         .groupBy(to_date(col("ts")).as("d"))
         .agg(sum(round(col("value"), 2).cast("decimal(18,2)")).as("rev"))
         .withColumn("idx",
-          row_number().over(Window.orderBy("d")).cast("long") - 1L)
-        .localCheckpoint() // tiny (day-cardinality); reused by grid+join
+          row_number().over(Window.orderBy("d")).cast("long") - 1L))
       val nDays = daily.agg(count(lit(1)).as("n_days"))
       val bs = s.range(1, 200).select(col("id").as("b"))
       val grid = bs.crossJoin(daily.select(col("idx").as("slot")))
@@ -1141,7 +1142,12 @@ object StatQueries {
     // whole lifecycle — split, model, q̂ pick, both score passes —
     // sits under the hash gate.
     "q330_conformal" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
+      // r21: checkpointed — the broadcast-joined + md5-coined split
+      // base feeds FOUR branches (model, calib, test, and calib's
+      // rank pass) and a broadcast join leaves no Exchange to
+      // reuse, so each branch re-ran the scan + join + md5
+      // (A/B in OPTIMIZATION_r21.md)
+      val li = Checkpoints(Tables.lineitem(s, dir)
         .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("l_partkey") === col("p_partkey"))
         .withColumn("__coin",
@@ -1149,13 +1155,7 @@ object StatQueries {
             lit(":"), col("l_linenumber").cast("string"), lit(":cp"))),
             1, 6), 16, 10).cast("long") % 5)
         .select(col("p_brand"), col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice").as("y"), col("__coin"))
-        // r21: checkpointed — the broadcast-joined + md5-coined split
-        // base feeds FOUR branches (model, calib, test, and calib's
-        // rank pass) and a broadcast join leaves no Exchange to
-        // reuse, so each branch re-ran the scan + join + md5
-        // (A/B in OPTIMIZATION_r21.md)
-        .localCheckpoint()
+          col("l_extendedprice").as("y"), col("__coin")))
       val model = li.filter(col("__coin") <= 2)
         .groupBy("p_brand")
         .agg(sum(col("y").cast("decimal(18,2)")).as("ts"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.RDDBlockId
 
 /** The package-private Spark calls behind graft's measured checkpoint
-  * statistics (`graft.ops.Graph.measured`). */
+  * statistics (`graft.ops.Checkpoints`). */
 object GraftSql {
   /** `df`, whose plan is `lr`, re-wrapped with `stats` as its estimate. */
   def withStats(df: DataFrame, lr: LogicalRDD, stats: Statistics): DataFrame = {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Checkpoints, Dedup}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -187,14 +187,18 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
 
   test("connectedComponents leaves at most one persisted RDD behind") {
     // ccStar releases each superseded round's checkpoint; only the
-    // one the result reads from stays. Compare RDD-id sets: the
-    // ContextCleaner may drop older persisted RDDs concurrently.
+    // one the result reads from stays, until the query's release frees
+    // it. Compare RDD-id sets: the ContextCleaner may drop older
+    // persisted RDDs concurrently; RDD ids grow monotonically, so a
+    // fresh RDD marks the call's start.
     val sc = spark.sparkContext
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val before = sc.getPersistentRDDs.keySet
+    val mark = sc.emptyRDD[Int].id
+    def fresh = sc.getPersistentRDDs.keySet.filter(_ > mark)
     Dedup.connectedComponents(chain).collect()
-    val fresh = sc.getPersistentRDDs.keySet -- before
     assert(fresh.size <= 1, s"retained ${fresh.size} new persisted RDDs")
+    Checkpoints.releaseQuery()
+    assert(fresh.isEmpty, s"releaseQuery left ${fresh.size} persisted RDDs")
   }
 
   test("nearDedupExact keeps one representative per transitive cluster; greedy may differ") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1269,8 +1269,10 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     // returned frame. The settle() fix eager-checkpoints the final
     // reduced frame once and releases the levels — so each call must
     // grow sc.getPersistentRDDs by exactly 1 (the output-sized final
-    // checkpoint), regardless of round count. unpersist updates the
-    // persistentRdds map synchronously, so the count is deterministic.
+    // checkpoint), regardless of round count, and the query's release
+    // (Checkpoints.releaseQuery) must free that one too. unpersist
+    // updates the persistentRdds map synchronously, so the count is
+    // deterministic.
     val sc = spark.sparkContext
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L), (6L, 5L))
@@ -1278,13 +1280,15 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val seeds = Seq(1L).toDF("node")
     def retainedAfter(label: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
       // compare RDD-id SETS, not counts: the ContextCleaner may
-      // concurrently drop older persisted RDDs whose frames were GC'd
-      val before = sc.getPersistentRDDs.keySet
-      val out = run
-      out.collect() // evaluate through the checkpoint
-      val fresh = sc.getPersistentRDDs.keySet -- before
+      // concurrently drop older persisted RDDs whose frames were GC'd.
+      // RDD ids grow monotonically: a fresh RDD marks the call's start.
+      val mark = sc.emptyRDD[Int].id
+      def fresh = sc.getPersistentRDDs.keySet.filter(_ > mark)
+      run.collect() // evaluate through the checkpoint
       assert(fresh.size === 1,
         s"$label retained ${fresh.size} new checkpoints (want 1)")
+      Checkpoints.releaseQuery()
+      assert(fresh.isEmpty, s"$label's checkpoint outlived releaseQuery")
     }
     retainedAfter("bfs")(Graph.bfs(edges, seeds, maxHops = 10))
     retainedAfter("katz")(Graph.katz(edges, levels = 4))
@@ -1377,8 +1381,8 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     def rddId(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.logical match { case lr: LogicalRDD => lr.rdd.id }
     val ids = Set(rddId(e), rddId(state))
-    Graph.releaseCheckpoint(e)
-    Graph.releaseCheckpoint(state)
+    Checkpoints.release(e)
+    Checkpoints.release(state)
     // unpersist is asynchronous here and the storage info is fed by
     // the listener bus: poll until both RDDs are gone
     val sc = spark.sparkContext
