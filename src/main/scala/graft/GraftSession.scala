@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   *  - managed tables (q96's bucketed setup) in a self-cleaning
   *    `TempDirs.scratch` warehouse, never a spark-warehouse/ in the cwd;
   *  - `Tables.sessionConf` applied at build time, never mid-session;
-  *  - the graft functions registered and the graft rules installed in
-  *    the "User Provided Optimizers" batch.
+  *  - the graft functions, optimizer rules and planner strategy
+  *    injected by `GraftExtensions`, the same seam
+  *    `spark.sql.extensions` installs on a cluster.
   */
 object GraftSession {
   /** `shufflePartitions` decouples the partition count from the thread
@@ -28,15 +29,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
+      .withExtensions(new graft.expressions.GraftExtensions)
     Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations = Seq(
-      graft.expressions.RewriteDotProduct, graft.expressions.RewriteRollingHash,
-      graft.plans.RewriteGroupedTopK, graft.plans.RewriteAggOnRollup)
-    spark.experimental.extraStrategies = Seq(graft.plans.GroupedTopKStrategy)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

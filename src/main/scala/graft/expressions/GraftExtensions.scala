@@ -1,61 +1,30 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Config-time extension entry point:
+import graft.plans.{GroupedTopKStrategy, RewriteAggOnRollup, RewriteGroupedTopK}
+
+/** graft's one installation list, the SparkSessionExtensions seam
+  * SURVEY.md §4.2 documents. `GraftSession` builds every session with
+  * it, and a cluster deployment gets the same set from
   *
   *   spark.sql.extensions=graft.expressions.GraftExtensions
   *
-  * installs the engine's native function surface (graft_dot) and the
-  * optimizer rewrite (declarative HOF dot product → fused expression)
-  * into every session of the application — the SparkSessionExtensions
-  * seam SURVEY.md §4.2 documents. Live sessions can instead call
-  * VectorExpressions.register + experimental.extraOptimizations. */
+  * It injects the twelve `graft_*` functions, the four optimizer rules
+  * and the grouped top-k planner strategy. Injected rules run inside
+  * the optimizer's Operator Optimization batches, in this order. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-        VectorExpressions.dotInfo, VectorExpressions.dotBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_band_keys"),
-        VectorExpressions.bandKeysInfo, VectorExpressions.bandKeysBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash"),
-        VectorExpressions.simhashInfo, VectorExpressions.simhashBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash"),
-        VectorExpressions.minhashInfo, VectorExpressions.minhashBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_agg"),
-        VectorExpressions.bloomAggInfo, VectorExpressions.bloomAggBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_contains"),
-        VectorExpressions.bloomContainsInfo, VectorExpressions.bloomContainsBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_rolling_hash"),
-        TextExpressions.rollingHashInfo, TextExpressions.rollingHashBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaro_winkler"),
-        TextExpressions.jaroWinklerInfo, TextExpressions.jaroWinklerBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_kll_agg"),
-        KllExpressions.aggInfo, KllExpressions.aggBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_kll_merge"),
-        KllExpressions.mergeInfo, KllExpressions.mergeBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_kll_quantile"),
-        KllExpressions.quantileInfo, KllExpressions.quantileBuilder))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_kll_n"),
-        KllExpressions.nInfo, KllExpressions.nBuilder))
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
-    ext.injectOptimizerRule(_ => RewriteRollingHash)
-    // the whole-operator seam (§4.2 rung (c)): grouped top-k — the
-    // Filter(row_number ≤ k, Window) idiom re-planned as per-group
-    // bounded heaps (graft.plans.GroupedTopK)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteGroupedTopK)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteAggOnRollup)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedTopKStrategy)
+    (VectorExpressions.functions ++ TextExpressions.functions ++ KllExpressions.functions)
+      .foreach(ext.injectFunction)
+    Seq[Rule[LogicalPlan]](RewriteDotProduct, RewriteRollingHash,
+      // the whole-operator seam (§4.2 rung (c)): grouped top-k — the
+      // Filter(row_number ≤ k, Window) idiom re-planned as per-group
+      // bounded heaps (graft.plans.GroupedTopK)
+      RewriteGroupedTopK, RewriteAggOnRollup)
+      .foreach(rule => ext.injectOptimizerRule(_ => rule))
+    ext.injectPlannerStrategy(_ => GroupedTopKStrategy)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.datasketches.kll.{KllDoublesSketch, KllSketch}
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -90,17 +90,19 @@ object KllExpressions {
       s"graft_kll_n expects 1 argument, got ${other.length}")
   }
 
-  /** Runtime registration (Verify/Bench/test sessions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kll_agg"), aggInfo, aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kll_merge"), mergeInfo, mergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kll_quantile"), quantileInfo, quantileBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kll_n"), nInfo, nBuilder)
-  }
+  /** The KLL functions, the one list that names them: `GraftExtensions`
+    * injects it into every graft session. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    (FunctionIdentifier("graft_kll_agg"), aggInfo, aggBuilder),
+    (FunctionIdentifier("graft_kll_merge"), mergeInfo, mergeBuilder),
+    (FunctionIdentifier("graft_kll_quantile"), quantileInfo, quantileBuilder),
+    (FunctionIdentifier("graft_kll_n"), nInfo, nBuilder))
+
+  /** `functions` registered on a session built without `GraftExtensions`.
+    * Only perfbench's own session needs it; it goes once that session
+    * comes from `GraftSession`. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach(f => spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3))
 }
 
 /** `graft_kll_agg(value[, k])` — build a KllDoublesSketch over a

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * deliberately conservative: float-array inputs, double-literal zero,
   * pure add merge, identity finish — anything else is left untouched.
   *
-  * Injected via GraftExtensions (config-time) or
-  * spark.experimental.extraOptimizations (live session). */
+  * Injected by GraftExtensions, so it runs in the optimizer's
+  * Operator Optimization batches. */
 object RewriteDotProduct extends Rule[LogicalPlan] {
 
   /** The lambda body must be a multiply of the two lambda variables,

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -258,11 +258,15 @@ object TextExpressions {
       s"graft_jaro_winkler expects 2 arguments, got ${other.length}")
   }
 
-  /** Runtime registration (config-time path: GraftExtensions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_rolling_hash"), rollingHashInfo, rollingHashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_jaro_winkler"), jaroWinklerInfo, jaroWinklerBuilder)
-  }
+  /** The text functions, the one list that names them: `GraftExtensions`
+    * injects it into every graft session. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    (FunctionIdentifier("graft_rolling_hash"), rollingHashInfo, rollingHashBuilder),
+    (FunctionIdentifier("graft_jaro_winkler"), jaroWinklerInfo, jaroWinklerBuilder))
+
+  /** `functions` registered on a session built without `GraftExtensions`.
+    * Only perfbench's own session needs it; it goes once that session
+    * comes from `GraftSession`. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach(f => spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3))
 }

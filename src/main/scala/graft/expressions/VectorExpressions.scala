@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -461,21 +461,19 @@ object VectorExpressions {
       s"graft_bloom_contains expects (sketch, key), got ${other.length} args")
   }
 
-  /** Runtime registration on a live session (the config-time path is
-    * GraftExtensions via spark.sql.extensions). After this,
-    * `call_function("graft_dot", a, b)` / SQL `graft_dot(a, b)` work. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"), dotInfo, dotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_band_keys"), bandKeysInfo, bandKeysBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_simhash"), simhashInfo, simhashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_minhash"), minhashInfo, minhashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_contains"), bloomContainsInfo, bloomContainsBuilder)
-  }
+  /** The vector functions, the one list that names them: `GraftExtensions`
+    * injects it into every graft session. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    (FunctionIdentifier("graft_dot"), dotInfo, dotBuilder),
+    (FunctionIdentifier("graft_band_keys"), bandKeysInfo, bandKeysBuilder),
+    (FunctionIdentifier("graft_simhash"), simhashInfo, simhashBuilder),
+    (FunctionIdentifier("graft_minhash"), minhashInfo, minhashBuilder),
+    (FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder),
+    (FunctionIdentifier("graft_bloom_contains"), bloomContainsInfo, bloomContainsBuilder))
+
+  /** `functions` registered on a session built without `GraftExtensions`.
+    * Only perfbench's own session needs it; it goes once that session
+    * comes from `GraftSession`. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach(f => spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3))
 }

@@ -21,7 +21,8 @@ import scala.util.control.NonFatal
   *    example a fixpoint round the next round has superseded;
   *  - per session: `shared` memoizes a frame across queries, and every
   *    checkpoint taken while building it belongs to the memo entry.
-  *    `releaseQuery()` never frees those; evicting the entry does.
+  *    `releaseQuery()` frees only those the entry's frame no longer
+  *    reads; evicting the entry frees the rest.
   *
   * A checkpoint truncates lineage, so a released one cannot be
   * recomputed: call `releaseQuery()` only after every frame returned
@@ -76,9 +77,11 @@ object Checkpoints {
     } catch { case NonFatal(_) => () }
 
   /** Free every checkpoint taken since the previous call, outside memo
-    * entries (best-effort, non-blocking). */
-  def releaseQuery(): Unit =
+    * entries, and trim the memo entries (best-effort, non-blocking). */
+  def releaseQuery(): Unit = {
     free(Iterator.continually(query.poll()).takeWhile(_ != null).toSeq)
+    trimMemos()
+  }
 
   private def free(owned: Seq[Owned]): Unit =
     owned.groupBy(_.sc).foreach { case (sc, os) =>
@@ -120,12 +123,31 @@ object Checkpoints {
       }
     }
 
-  /** Persisted RDD ids owned by the memo entries of `s`'s application. */
-  private[graft] def memoIds(s: SparkSession): Set[Int] = {
+  /** A memo whose frame is itself a checkpoint needs no other storage
+    * once that checkpoint has materialized: its lineage is truncated, so
+    * the checkpoints `build` took (the rounds of an iterative op, say)
+    * are unreferenced. Free them now, so the storage a session holds
+    * does not depend on when the ContextCleaner next runs. */
+  private def trimMemos(): Unit = memos.synchronized {
+    memos.foreach { case (key, m) =>
+      m.df.queryExecution.logical match {
+        case lr: LogicalRDD if lr.rdd.isCheckpointed && m.owned.exists(_.id != lr.rdd.id) =>
+          val (frame, inner) = m.owned.partition(_.id == lr.rdd.id)
+          free(inner)
+          memos.put(key, m.copy(owned = frame))
+        case _ => ()
+      }
+    }
+  }
+
+  /** Persisted RDD ids owned by each memo entry (dir, kind) of `s`'s
+    * application. */
+  private[graft] def memoIds(s: SparkSession): Map[(String, String), Set[Int]] = {
     val app = s.sparkContext.applicationId
     val live = s.sparkContext.getPersistentRDDs.keySet
-    memos.collect { case ((`app`, _, _), m) => m.owned.map(_.id) }
-      .flatten.filter(live.contains).toSet
+    memos.collect { case ((`app`, dir, kind), m) =>
+      (dir, kind) -> m.owned.map(_.id).filter(live.contains).toSet
+    }.toMap
   }
 
   /** (persisted RDDs, MB their blocks hold) right now: read from the

@@ -95,11 +95,14 @@ object RewriteGroupedTopK extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Spark ≥3.5's own `InsertWindowGroupLimits` usually fires first,
-    * wedging a logical WindowGroupLimit (a sort-based per-group row
-    * pruner) under the Window. The heap operator subsumes it — keeping
-    * it would pay its TWO sorts for nothing — so the rewrite strips a
-    * matching layer. */
+  /** A session that runs this rule after Spark's own
+    * `InferWindowGroupLimit` (one that adds it to the "User Provided
+    * Optimizers" batch, as perfbench's does) finds a logical
+    * WindowGroupLimit (a sort-based per-group row pruner) wedged under
+    * the Window. The heap operator subsumes it — keeping it would pay
+    * its TWO sorts for nothing — so the rewrite strips a matching
+    * layer. Injected through `GraftExtensions` the rule runs in the
+    * Operator Optimization batches, before that inference. */
   private def stripGroupLimit(child: LogicalPlan,
       partitionSpec: Seq[Expression], k: Int): LogicalPlan = child match {
     case org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit(

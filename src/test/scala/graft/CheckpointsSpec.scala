@@ -18,12 +18,14 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
   private def releasedAfter(label: String)(build: => DataFrame): Unit = {
     val mark = sc.emptyRDD[Int].id
     def fresh = sc.getPersistentRDDs.keySet.filter(_ > mark).toSet --
-      Checkpoints.memoIds(spark)
+      memoIds
     build.collect()
     assert(fresh.nonEmpty, s"$label persisted nothing")
     Checkpoints.releaseQuery()
     assert(fresh.isEmpty, s"$label left RDDs $fresh persisted after releaseQuery")
   }
+
+  private def memoIds: Set[Int] = Checkpoints.memoIds(spark).values.flatten.toSet
 
   test("every op family's checkpoints are freed by releaseQuery") {
     val keyed = (1L to 200L).map(i => (i % 7, i)).toDF("g", "k")
@@ -46,13 +48,14 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
 
   test("a session memo outlives releaseQuery and answers the next query") {
     SparkEntry.queries("q249_trimmed_mean_ranged")(spark, sfDir).collect()
-    val memo = Checkpoints.memoIds(spark)
+    def ranked = Checkpoints.memoIds(spark).getOrElse(sfDir -> "rankedPrices", Set.empty)
+    val memo = ranked
     assert(memo.nonEmpty)
     Checkpoints.releaseQuery()
-    assert(Checkpoints.memoIds(spark) === memo, "releaseQuery freed a memo entry")
+    assert(ranked === memo, "releaseQuery freed the memo entry")
     val got = SparkEntry.queries("q252_grouped_median")(spark, sfDir).collect()
     Checkpoints.releaseQuery()
-    assert(Checkpoints.memoIds(spark) === memo, "q252 rebuilt the memo")
+    assert(ranked === memo, "q252 rebuilt the memo")
     // the oracle's own window formulation, run by Spark
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("lineitem")
     val want = spark.sql(SparkEntry.oracleSql("q252_grouped_median")
@@ -63,10 +66,10 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
   test("building a memo for a new fixture dir evicts the old dir's entries") {
     val a = Checkpoints.shared(spark, "/fixture/a", "t")(
       Checkpoints(spark.range(50).toDF("id")))
-    val aIds = Checkpoints.memoIds(spark)
+    val aIds = memoIds
     assert(aIds.nonEmpty)
     Checkpoints.releaseQuery()
-    assert(Checkpoints.memoIds(spark) === aIds)
+    assert(memoIds === aIds)
     // a hit returns the same frame and takes no new checkpoint
     assert(Checkpoints.shared(spark, "/fixture/a", "t")(
       fail("a memo hit must not rebuild")) eq a)
@@ -75,7 +78,19 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
     assert(b.count() === 5L)
     assert((aIds & sc.getPersistentRDDs.keySet.toSet).isEmpty,
       "the evicted dir's checkpoints are still persisted")
-    assert((Checkpoints.memoIds(spark) & aIds).isEmpty)
+    assert((memoIds & aIds).isEmpty)
+  }
+
+  test("after q81 and releaseQuery each live memo entry holds exactly one checkpoint") {
+    // q81 builds the "cc" memo over the "lsh" one; ccStar's rounds are
+    // taken while building it. Once the memo's own lazy checkpoint has
+    // materialized they are unreferenced, and releaseQuery frees them
+    // rather than leaving them to whenever the ContextCleaner runs.
+    SparkEntry.queries("q81_near_dedup_cc")(spark, sfDir).collect()
+    Checkpoints.releaseQuery()
+    val held = Checkpoints.memoIds(spark)
+    assert(held.keySet.map(_._2).contains("cc"), s"no cc memo among $held")
+    assert(held.values.forall(_.size == 1), s"memo entries hold $held")
   }
 
   test("src/main checkpoints and persists only through Checkpoints") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{DotProductF32, RewriteDotProduct, VectorExpressions}
+import graft.expressions.{DotProductF32, RewriteDotProduct}
 import graft.ops.Similarity
 import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import org.apache.spark.sql.functions._
@@ -13,7 +13,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   test("graft_dot registers and equals the declarative zip_with/aggregate dot") {
-    VectorExpressions.register(spark)
     // The rewrite rule is off, so the "hof" side runs as the
     // zip_with/aggregate fold and not as DotProductF32.
     withoutRules(RewriteDotProduct) {
@@ -29,7 +28,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_dot null semantics: null array yields null; empty arrays yield 0") {
-    VectorExpressions.register(spark)
     val df = Seq(
       (Some(Seq(1.0f, 2.0f)), Some(Seq(3.0f, 4.0f))),
       (None, Some(Seq(1.0f))),
@@ -62,7 +60,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_dot matches HOF dot on length mismatch and null elements") {
-    VectorExpressions.register(spark)
     val rows = withoutRules(RewriteDotProduct) {
       val q = hostileVectors
         .select(
@@ -107,7 +104,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_dot survives codegen and interpreted paths identically") {
-    VectorExpressions.register(spark)
     def run(): Seq[Double] =
       Tables.embeddings(spark, sfDir).limit(50)
         .select(call_function("graft_dot", col("embedding"), col("embedding")))
@@ -186,64 +182,61 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     assert(withCodegen.nonEmpty && withCodegen.forall { case (m, s) => m.isDefined && s.isDefined })
   }
 
-  test("all five native functions are registered and SQL-callable") {
-    // (A true config-time session test needs its own JVM — one
-    // SparkContext per JVM, and getOrCreate would return the shared
-    // session with extensions unapplied. The fixture registers via
-    // VectorExpressions.register, which is the same wiring
-    // GraftExtensions injects; additionally the extension class must
-    // apply cleanly to a fresh SparkSessionExtensions.)
-    val names = Seq("graft_dot", "graft_band_keys", "graft_simhash",
-      "graft_minhash", "graft_rolling_hash")
-    for (n <- names)
-      assert(spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)),
-        s"$n not registered")
-    val d = spark.sql("SELECT graft_dot(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d")
-      .collect()(0).getDouble(0)
-    assert(d === 11.0)
-    // SQL callers pass plain constant trees, not pre-folded Literals
-    // (constant folding runs after function resolution): array(...) for
-    // planes, INT literals for band width / k / seed must all resolve.
-    val planesSql = Seq.fill(8)("array(0.5f, 0.5f)").mkString("array(", ", ", ")")
-    val keys = spark.sql(
-        s"SELECT graft_band_keys(array(1.0f, 2.0f), $planesSql, 8) AS k")
-      .collect()(0).getSeq[Long](0)
-    assert(keys === Seq(255L)) // every projection positive → all 8 bits set
-    val mh = spark.sql("SELECT graft_minhash(array('a', 'b'), 4, 7) AS m")
-      .collect()(0).getSeq[Long](0)
-    assert(mh.length === 4)
-    assert(!spark.sql("SELECT graft_simhash(array('a', 'b')) AS s")
-      .collect()(0).isNullAt(0))
-    // "abc" → ((0·31+97)·31+98)·31+99 mod 1e9+7
-    val rh = spark.sql("SELECT graft_rolling_hash('abc') AS h")
-      .collect()(0).getLong(0)
-    assert(rh === ((97L * 31 + 98) * 31 + 99) % 1000000007L)
-    new graft.expressions.GraftExtensions()
-      .apply(new org.apache.spark.sql.SparkSessionExtensions)
-  }
-
   test("the shared test session is the production GraftSession: rules, strategy, functions") {
     import graft.expressions.RewriteRollingHash
     import graft.plans.{GroupedTopKStrategy, RewriteAggOnRollup, RewriteGroupedTopK}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
     val s = TestSpark.spark
-    assert(s.experimental.extraOptimizations === Seq(RewriteDotProduct,
-      RewriteRollingHash, RewriteGroupedTopK, RewriteAggOnRollup))
-    assert(s.experimental.extraStrategies === Seq(GroupedTopKStrategy))
-    // the 12 functions GraftExtensions injects at config time
-    val names = Seq("graft_dot", "graft_band_keys", "graft_simhash",
-      "graft_minhash", "graft_bloom_agg", "graft_bloom_contains",
-      "graft_rolling_hash", "graft_jaro_winkler", "graft_kll_agg",
-      "graft_kll_merge", "graft_kll_quantile", "graft_kll_n")
-    val missing = names.filterNot(n => s.sessionState.functionRegistry
-      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
-    assert(missing.isEmpty, s"unresolved: $missing")
+    // GraftExtensions' rules join the Operator Optimization batches, in order
+    assert(s.sessionState.optimizer.extendedOperatorOptimizationRules === Seq(
+      RewriteDotProduct, RewriteRollingHash, RewriteGroupedTopK, RewriteAggOnRollup))
+    assert(s.sessionState.planner.strategies.count(_ == GroupedTopKStrategy) === 1)
+    // Every graft function through SQL analysis, resolved to the class
+    // its ExpressionInfo names. SQL callers pass plain constant trees,
+    // not pre-folded Literals (constant folding runs after function
+    // resolution): array(...) for planes, INT literals for band width /
+    // k / seed must all resolve.
+    val planesSql = Seq.fill(8)("array(0.5f, 0.5f)").mkString("array(", ", ", ")")
+    val kll = "(SELECT graft_kll_agg(CAST(v AS DOUBLE)) FROM VALUES (1), (2), (3) AS t(v))"
+    val calls = Seq(
+      "graft_dot" -> "graft_dot(array(1.0f, 2.0f), array(3.0f, 4.0f))",
+      "graft_band_keys" -> s"graft_band_keys(array(1.0f, 2.0f), $planesSql, 8)",
+      "graft_simhash" -> "graft_simhash(array('a', 'b'))",
+      "graft_minhash" -> "graft_minhash(array('a', 'b'), 4, 7)",
+      "graft_bloom_agg" -> "graft_bloom_agg(7L, 10L, 1024L)",
+      "graft_bloom_contains" ->
+        "graft_bloom_contains((SELECT graft_bloom_agg(7L, 10L, 1024L)), 7L)",
+      "graft_rolling_hash" -> "graft_rolling_hash('abc')",
+      "graft_jaro_winkler" -> "graft_jaro_winkler('martha', 'marhta')",
+      "graft_kll_agg" -> "graft_kll_agg(2.0d)",
+      "graft_kll_merge" -> s"graft_kll_merge($kll)",
+      "graft_kll_quantile" -> s"graft_kll_quantile($kll, 0.5d)",
+      "graft_kll_n" -> s"graft_kll_n($kll)")
+    assert(calls.map(_._1).distinct.size === 12)
+    val got = calls.map { case (name, call) =>
+      val df = s.sql(s"SELECT $call AS v")
+      val cls = s.sessionState.functionRegistry
+        .lookupFunction(FunctionIdentifier(name)).map(_.getClassName)
+      assert(cls.nonEmpty, s"$name not registered")
+      assert(df.queryExecution.analyzed.expressions
+        .exists(_.exists(_.getClass.getName == cls.get)), s"$name did not resolve to ${cls.get}")
+      name -> df.collect()(0)
+    }.toMap
+    assert(got("graft_dot").getDouble(0) === 11.0)
+    assert(got("graft_band_keys").getSeq[Long](0) === Seq(255L)) // every projection positive
+    assert(!got("graft_simhash").isNullAt(0))
+    assert(got("graft_minhash").getSeq[Long](0).length === 4)
+    assert(got("graft_bloom_contains").getBoolean(0))
+    // "abc" → ((0·31+97)·31+98)·31+99 mod 1e9+7
+    assert(got("graft_rolling_hash").getLong(0) === ((97L * 31 + 98) * 31 + 99) % 1000000007L)
+    assert(math.abs(got("graft_jaro_winkler").getDouble(0) - 0.961111111111) < 1e-9)
+    assert(got("graft_kll_n").getLong(0) === 3L)
+    assert(got("graft_kll_quantile").getDouble(0) === 2.0)
   }
 
   test("KLL functions are registered and SQL-callable end to end") {
-    // fixture registers via KllExpressions.register (the same wiring
-    // GraftExtensions injects — applied-cleanly check above); the SQL
-    // path must resolve literal k and thread agg → merge → quantile/n
+    // the SQL path must resolve literal k and thread agg → merge →
+    // quantile/n
     val row = spark.sql(
         """SELECT graft_kll_n(m) AS n,
           |       graft_kll_quantile(m, 0.5d) AS p50
@@ -298,7 +291,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     ("abc", "abc", 1.0))
 
   test("graft_jaro_winkler matches DuckDB-adjudicated values (codegen path)") {
-    graft.expressions.TextExpressions.register(spark)
     val got = jwCases.map { case (a, b, _) => (a, b) }.toDF("a", "b")
       .select(call_function("graft_jaro_winkler", col("a"), col("b")).as("s"))
       .collect().map(_.getDouble(0))
@@ -324,7 +316,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_jaro_winkler is symmetric and 1.0 iff equal non-empty") {
-    graft.expressions.TextExpressions.register(spark)
     val words = Seq("widget", "gadget", "wídget", "bolt", "b", "anvil plate")
     val pairs = for (x <- words; y <- words) yield (x, y)
     val rows = pairs.toDF("a", "b").select(col("a"), col("b"),

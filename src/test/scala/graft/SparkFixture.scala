@@ -45,14 +45,13 @@ trait SparkFixture {
     }
   }
 
-  /** Run `body` with `rules` taken out of the session's optimizer rules,
-    * restoring the previous list afterwards — the "without rule" side of
-    * a rewrite A/B on the shared production session. */
-  def withoutRules[A](rules: Rule[LogicalPlan]*)(body: => A): A = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev.filterNot(rules.contains)
-    try body finally spark.experimental.extraOptimizations = prev
-  }
+  /** Run `body` with `rules` excluded from the session's optimizer
+    * (Spark's `spark.sql.optimizer.excludedRules`, which every batch
+    * honours, the Operator Optimization batches the injected rules run
+    * in too) — the "without rule" side of a rewrite A/B on the shared
+    * production session. */
+  def withoutRules[A](rules: Rule[LogicalPlan]*)(body: => A): A =
+    withConf("spark.sql.optimizer.excludedRules" -> rules.map(_.ruleName).mkString(","))(body)
 
   /** Whether `df`'s optimized plan holds an expression of class `E` —
     * e.g. that a declarative witness still runs as its HOF form
