@@ -182,6 +182,41 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     assert(withCodegen.nonEmpty && withCodegen.forall { case (m, s) => m.isDefined && s.isDefined })
   }
 
+  test("all five native functions are registered and SQL-callable") {
+    // The shared session is built through GraftExtensions, so these
+    // resolve through the same injection spark.sql.extensions performs;
+    // the extension class must also apply cleanly to a fresh
+    // SparkSessionExtensions.
+    val names = Seq("graft_dot", "graft_band_keys", "graft_simhash",
+      "graft_minhash", "graft_rolling_hash")
+    for (n <- names)
+      assert(spark.sessionState.functionRegistry
+        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)),
+        s"$n not registered")
+    val d = spark.sql("SELECT graft_dot(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d")
+      .collect()(0).getDouble(0)
+    assert(d === 11.0)
+    // SQL callers pass plain constant trees, not pre-folded Literals
+    // (constant folding runs after function resolution): array(...) for
+    // planes, INT literals for band width / k / seed must all resolve.
+    val planesSql = Seq.fill(8)("array(0.5f, 0.5f)").mkString("array(", ", ", ")")
+    val keys = spark.sql(
+        s"SELECT graft_band_keys(array(1.0f, 2.0f), $planesSql, 8) AS k")
+      .collect()(0).getSeq[Long](0)
+    assert(keys === Seq(255L)) // every projection positive → all 8 bits set
+    val mh = spark.sql("SELECT graft_minhash(array('a', 'b'), 4, 7) AS m")
+      .collect()(0).getSeq[Long](0)
+    assert(mh.length === 4)
+    assert(!spark.sql("SELECT graft_simhash(array('a', 'b')) AS s")
+      .collect()(0).isNullAt(0))
+    // "abc" → ((0·31+97)·31+98)·31+99 mod 1e9+7
+    val rh = spark.sql("SELECT graft_rolling_hash('abc') AS h")
+      .collect()(0).getLong(0)
+    assert(rh === ((97L * 31 + 98) * 31 + 99) % 1000000007L)
+    new graft.expressions.GraftExtensions()
+      .apply(new org.apache.spark.sql.SparkSessionExtensions)
+  }
+
   test("the shared test session is the production GraftSession: rules, strategy, functions") {
     import graft.expressions.RewriteRollingHash
     import graft.plans.{GroupedTopKStrategy, RewriteAggOnRollup, RewriteGroupedTopK}
