@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.ops.Checkpoints
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Join operators (SURVEY.md §2B "Joins"): equi inner/left/full,
@@ -525,19 +526,12 @@ object JoinQueries {
     // formulation was tried first and diverged on a round-half
     // boundary at sf0.01 — see the op scaladoc).
     "q163_pagerank" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
+      val eb = tradeEdges(s, dir)
       // the DERIVED edge list (scan+join+distinct) is re-read by every
       // superstep — checkpoint it once at the call site (r22, VERDICT
       // r21 #7; the op stays bucketing-transparent, so a bucketed
       // caller's layout survives).
-      val edges = Checkpoints(eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"))))
+      val edges = Checkpoints(bothWays(eb))
       graft.ops.Graph.pageRank(edges, iterations = 3)
         .orderBy("node")
     }),
@@ -554,13 +548,7 @@ object JoinQueries {
       // derived edge build read by all four half-step joins —
       // checkpoint at the call site (r22, VERDICT r21 #7; the q163
       // comment)
-      val edges = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct())
+      val edges = Checkpoints(tradeEdges(s, dir, ids = ("src", "dst")))
       graft.ops.Graph.hits(edges, iterations = 2)
         .orderBy("node")
     }),
@@ -579,16 +567,8 @@ object JoinQueries {
     // frontier joins, deterministic min-dist fixpoint ⇒ HASH-GATED
     // against a WITH RECURSIVE replay (the q303 discipline).
     "q327_bfs_hops" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .filter(col("l_quantity") >= 48)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = tradeEdges(s, dir, keep = Some(col("l_quantity") >= 48))
+      val edges = bothWays(eb)
       val seeds = Tables.supplier(s, dir)
         .join(Tables.nation(s, dir), col("s_nationkey") === col("n_nationkey"))
         .join(Tables.region(s, dir), col("n_regionkey") === col("r_regionkey"))
@@ -609,17 +589,10 @@ object JoinQueries {
     // locality is bit-visible, not approximate). The whole build
     // hash-matches the unrolled DuckDB replay.
     "q333_personalized_pagerank" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
+      val eb = tradeEdges(s, dir)
       // derived edge build read by every superstep — checkpoint at
       // the call site (r22, VERDICT r21 #7; the q163 comment)
-      val edges = Checkpoints(eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"))))
+      val edges = Checkpoints(bothWays(eb))
       val seeds = Tables.supplier(s, dir)
         .join(Tables.nation(s, dir), col("s_nationkey") === col("n_nationkey"))
         .join(Tables.region(s, dir), col("n_regionkey") === col("r_regionkey"))
@@ -671,15 +644,8 @@ object JoinQueries {
     // depends only on (cur, t)), so each hop is a node-sized join,
     // never a per-walk fan-out; 3 steps = 3 bounded joins.
     "q346_random_walks" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = tradeEdges(s, dir)
+      val edges = bothWays(eb)
       def nextHop(t: Int) = edges
         .select(col("src"), col("dst"),
           substring(md5(concat_ws(":", col("src"), lit(t), col("dst"))),
@@ -716,15 +682,8 @@ object JoinQueries {
     // src at 100 TB (the measured q171/q333 remedy) and the join side
     // is Exchange-free.
     "q347_sssp_weighted" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = tradeEdges(s, dir)
+      val edges = bothWays(eb)
         .withColumn("w",
           conv(substring(md5(concat_ws(":", lit("sw"),
             least(col("src"), col("dst")),
@@ -798,9 +757,7 @@ object JoinQueries {
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       val deg = ib.groupBy(col("l_partkey").as("p"))
         .agg(count(lit(1)).as("d"))
-      val co = ib.as("a")
-        .join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
+      val co = basketPairs(ib)
         .groupBy(col("a.l_partkey").as("p"), col("b.l_partkey").as("q"))
         .agg(count(lit(1)).as("n_co"))
       val sym = co.select(col("p"), col("q"), col("n_co"))
@@ -844,9 +801,7 @@ object JoinQueries {
       val tot = ib.agg(countDistinct(col("l_orderkey")).as("n_orders"))
       val deg = ib.groupBy(col("l_partkey").as("p"))
         .agg(count(lit(1)).as("d"))
-      val co = ib.as("a")
-        .join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
+      val co = basketPairs(ib)
         .groupBy(col("a.l_partkey").as("p"), col("b.l_partkey").as("q"))
         .agg(count(lit(1)).as("n_co"))
       val sym = co.select(col("p").as("antecedent"),
@@ -884,16 +839,8 @@ object JoinQueries {
     // — positive but far from 1), which is exactly what a quality
     // metric is FOR.
     "q358_modularity" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .filter(col("l_quantity") === 1)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = tradeEdges(s, dir, keep = Some(col("l_quantity") === 1))
+      val edges = bothWays(eb)
       val labels = graft.ops.Graph.labelPropagate(edges, supersteps = 3)
       val mE = eb
         .join(labels.select(col("node").as("c"), col("label").as("lc")),
@@ -931,15 +878,8 @@ object JoinQueries {
     // read exactly; the metric would move toward 0 only on a graph
     // with within-side degree mixing.
     "q359_assortativity" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = tradeEdges(s, dir)
+      val edges = bothWays(eb)
       val deg = edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("d"))
       val moments = edges
@@ -979,16 +919,8 @@ object JoinQueries {
       // the base trade-graph join don't replay per consumer (they
       // did: 27 s isolated at sf0.1 before, the q365 lazy-chain
       // lesson applied here too).
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .filter(col("l_quantity") === 1)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir, keep = Some(col("l_quantity") === 1)))
+      val edges = bothWays(eb)
       val init = Checkpoints(graft.ops.Graph.labelPropagate(edges, supersteps = 3))
       val refined = graft.ops.Graph.louvainRefine(edges, init, rounds = 2)
       val deg = Checkpoints(edges.groupBy(col("src").as("node"))
@@ -1036,16 +968,8 @@ object JoinQueries {
     "q367_louvain_level2" -> ((s, dir) => {
       // same base graph, init, and level-1 refinement as q363 (the
       // pyramid's lower rung is shared machinery, not a re-derivation)
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .filter(col("l_quantity") === 1)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir, keep = Some(col("l_quantity") === 1)))
+      val edges = bothWays(eb)
       val init = graft.ops.Graph.labelPropagate(edges, supersteps = 3)
       // ONE level-1 round (vs q363's two): the pyramid's division of
       // labor — a finer level-1 partition leaves the coarse merge
@@ -1108,16 +1032,8 @@ object JoinQueries {
     // louvainMove's one-join-one-groupBy round on the full edge list;
     // every later level runs on a community-counted graph.
     "q370_louvain_pyramid" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .filter(col("l_quantity") === 1)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir, keep = Some(col("l_quantity") === 1)))
+      val edges = bothWays(eb)
         .withColumn("w", lit(1L))
       val lv = graft.ops.Graph.louvainPyramid(edges, levels = 3,
         moveRounds = 1)
@@ -1163,21 +1079,8 @@ object JoinQueries {
     // would claim (their early edges run backward in time).
     "q364_temporal_reach" -> ((s, dir) => {
       // two consumers (edge build + seed min) — checkpoint once
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"),
-          (year(col("o_orderdate")) * 10000 +
-            month(col("o_orderdate")) * 100 +
-            dayofmonth(col("o_orderdate"))).cast("long").as("t"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
-          col("t"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
-          col("t")))
+      val eb = Checkpoints(tradeEdges(s, dir, extra = Seq(yyyymmdd)))
+      val edges = bothWays(eb)
       val seed = eb.agg(min(col("c")).as("node"))
       graft.ops.Graph.earliestArrival(edges, seed, 0L, rounds = 4)
         .orderBy("node")
@@ -1202,21 +1105,8 @@ object JoinQueries {
     // claim a later departure hold a strictly earlier ld (their late
     // edges lead only to nodes already past their own departure).
     "q368_latest_departure" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"),
-          (year(col("o_orderdate")) * 10000 +
-            month(col("o_orderdate")) * 100 +
-            dayofmonth(col("o_orderdate"))).cast("long").as("t"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
-          col("t"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
-          col("t")))
+      val eb = Checkpoints(tradeEdges(s, dir, extra = Seq(yyyymmdd)))
+      val edges = bothWays(eb)
       val target = eb.agg(min(col("c")).as("node"))
       graft.ops.Graph.latestDeparture(edges, target, 19970101L,
           rounds = 4)
@@ -1243,20 +1133,9 @@ object JoinQueries {
     // earliest-departure stratum's transit to the same node outright
     // (141 of 160 at sf0.001, likewise all strict wins).
     "q369_fastest_journey" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"),
-          datediff(col("o_orderdate"), lit("1970-01-01"))
-            .cast("long").as("t"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
-          col("t"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
-          col("t")))
+      val eb = Checkpoints(tradeEdges(s, dir, extra = Seq(
+        datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("t"))))
+      val edges = bothWays(eb)
       val seed = eb.agg(min(col("c")).as("node"))
       graft.ops.Graph.fastestJourney(edges, seed, rounds = 4)
         .orderBy("node")
@@ -1282,15 +1161,8 @@ object JoinQueries {
     // δ spreads over >4 decades — the quantization is exercised far
     // from its truncation floor.
     "q371_betweenness" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir))
+      val edges = bothWays(eb)
       val srcs = eb.select(col("c").as("node")).distinct()
         .orderBy(md5(concat(lit("bc:"), col("node").cast("string"))),
           col("node"))
@@ -1320,21 +1192,8 @@ object JoinQueries {
     // witness. Output also carries the earliest ≤5-hop arrival (the
     // q364 decoration riding the same groupBy).
     "q372_shortest_journey" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"),
-          (year(col("o_orderdate")) * 10000 +
-            month(col("o_orderdate")) * 100 +
-            dayofmonth(col("o_orderdate"))).cast("long").as("t"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"),
-          col("t"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst"),
-          col("t")))
+      val eb = Checkpoints(tradeEdges(s, dir, extra = Seq(yyyymmdd)))
+      val edges = bothWays(eb)
       val seed = eb.agg(min(col("s1")).as("node"))
       graft.ops.Graph.shortestJourney(edges, seed, 19971001L, rounds = 5)
         .orderBy("node")
@@ -1360,15 +1219,8 @@ object JoinQueries {
     // four distance classes realized, so every quantized 1/d constant
     // reaches the hash).
     "q373_harmonic" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir))
+      val edges = bothWays(eb)
       val srcs = eb.select(col("c").as("node")).distinct()
         .orderBy(md5(concat(lit("hc:"), col("node").cast("string"))),
           col("node"))
@@ -1450,8 +1302,6 @@ object JoinQueries {
     // graph, higher clustering); the fixture has no deg ≤ 1 node, so
     // that branch is pinned by GraphSpec, not the gate.
     "q375_local_clustering" -> ((s, dir) => {
-      val ib = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
       // deliberately NOT checkpointed (unlike q365's peel loop): the
       // operator references the edge frame five times, but every
       // reference reads the SAME distinct-exchange output, so shuffle
@@ -1462,11 +1312,7 @@ object JoinQueries {
       // the lazy end-to-end form the hash oracle gates. (r21: both
       // wedge joins inside triangleCounts now run SHUFFLE_HASH — see
       // triangleCountsOriented; sf1 wall 843 → 69.5 s at zero spill.)
-      val edges = ib.as("a")
-        .join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
+      val edges = coPurchaseEdges(Tables.lineitem(s, dir))
       graft.ops.Graph.localClustering(edges).orderBy("node")
     }),
 
@@ -1488,15 +1334,8 @@ object JoinQueries {
     // at ecc 4), so the exhaustion and lower-bound branches both
     // reach the hash; GraphSpec pins both branches by hand as well.
     "q376_eccentricity" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir))
+      val edges = bothWays(eb)
       val srcs = eb.select(col("c").as("node")).distinct()
         .orderBy(md5(concat(lit("ecc:"), col("node").cast("string"))),
           col("node"))
@@ -1527,16 +1366,8 @@ object JoinQueries {
     // positive — the honesty flag genuinely fires on the fixture,
     // not just in the spec).
     "q389_articulation" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .filter(col("l_quantity") === 1)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir, keep = Some(col("l_quantity") === 1)))
+      val edges = bothWays(eb)
       def side(c: org.apache.spark.sql.Column, tag: String) =
         eb.select(c.as("node")).distinct()
           .orderBy(md5(concat(lit(tag), col("node").cast("string"))),
@@ -1561,15 +1392,8 @@ object JoinQueries {
     // signal) and every walk reaches full length (the symmetrized
     // graph has no sink; the sink-stop branch is spec-pinned).
     "q387_walk_corpus" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir))
+      val edges = bothWays(eb)
       graft.ops.Graph.deterministicWalks(edges, length = 5)
         .orderBy("start", "step")
     }),
@@ -1626,15 +1450,8 @@ object JoinQueries {
     // walk mass genuinely re-ranks instead of rescaling degree; Katz
     // is measurably NOT a degree/PageRank monotone on this fixture.
     "q381_katz" -> ((s, dir) => {
-      val eb = Checkpoints(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct())
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = Checkpoints(tradeEdges(s, dir))
+      val edges = bothWays(eb)
       graft.ops.Graph.katz(edges, levels = 4).orderBy("node")
     }),
 
@@ -1680,13 +1497,7 @@ object JoinQueries {
     // EVERY round (sf0.001: mis 2/1/3 by round, removed 157/21/14,
     // live 2; sf0.01: mis 16/10/15, removed 1218/314/258, live 169).
     "q379_mis" -> ((s, dir) => {
-      val ib = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-      val und = ib.as("a")
-        .join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
+      val und = coPurchaseEdges(Tables.lineitem(s, dir))
       val edges = und.select(col("u").as("src"), col("v").as("dst"))
         .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
       graft.ops.Graph.luby(edges, rounds = 3)
@@ -1704,8 +1515,8 @@ object JoinQueries {
     // survive and peel branches fire). Support = one wedge join per
     // round (the q171 kernel: adjacency ⋈ adjacency on the shared
     // endpoint, closed by the third edge — output-sized, never
-    // parts³); rounds are FIXED like sssp's (the gateable bounded
-    // prefix of the fixpoint — converged rounds are no-ops); final
+    // parts³); rounds are BOUNDED like sssp's (the gateable prefix of
+    // the fixpoint — converged rounds are no-ops, so they are skipped); final
     // support recomputed on the surviving graph with left+coalesce
     // so a 0-support survivor reads honestly. At 100 TB: q171's
     // degree-oriented enumeration + bucket-on-src apply per round
@@ -1713,9 +1524,6 @@ object JoinQueries {
     "q365_ktruss" -> ((s, dir) => {
       val pk = Tables.part(s, dir).filter(col("p_brand").like("Brand#2%"))
         .select(col("p_partkey"))
-      val ib = Tables.lineitem(s, dir)
-        .join(pk, col("l_partkey") === col("p_partkey"), "left_semi")
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
       def support(ed: org.apache.spark.sql.DataFrame) = {
         val adj = ed.select(col("u").as("s1"), col("v").as("t1"))
           .unionByName(ed.select(col("v").as("s1"), col("u").as("t1")))
@@ -1730,19 +1538,20 @@ object JoinQueries {
           .select(col("u"), col("v"),
             coalesce(col("sup"), lit(0L)).as("sup"))
       }
-      // each peel round checkpoints (the ccStar lineage rule —
-      // without it round r recomputes rounds 1..r−1 and support()
-      // references its input three times, so the lazy chain re-ran
-      // the base wedge join ~3⁴ times: 413 s at sf0.1, measured).
-      // Checkpoints are edge-bounded (≤ ~100k × 2 longs); the final
-      // round's backs the returned frame.
-      var e = Checkpoints(ib.as("a").join(ib.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct())
-      for (_ <- 1 to 3)
-        e = Checkpoints(support(e).filter(col("sup") >= 4).select(col("u"), col("v")))
+      // the peel rounds run in Graph.fixpoint, so each round
+      // checkpoints (the ccStar lineage rule — without it round r
+      // recomputes rounds 1..r−1 and support() references its input
+      // three times, so the lazy chain re-ran the base wedge join ~3⁴
+      // times: 413 s at sf0.1, measured) and frees the round it
+      // supersedes. A round only removes edges, so an unchanged edge
+      // count is an unchanged edge set: every later round would be a
+      // no-op, and the loop stops there. Checkpoints are edge-bounded
+      // (≤ ~100k × 2 longs); the final round's backs the returned frame.
+      val e = graft.ops.Graph.fixpoint(coPurchaseEdges(Tables.lineitem(s, dir)
+          .join(pk, col("l_partkey") === col("p_partkey"), "left_semi")),
+        Seq(count(lit(1))), maxRounds = 3)(graft.ops.Graph.unchanged) { (held, _) =>
+        support(held.last).filter(col("sup") >= 4).select(col("u"), col("v"))
+      }.last
       support(e).orderBy("u", "v")
     }),
 
@@ -1754,13 +1563,7 @@ object JoinQueries {
     // the INDEPENDENT id-ordered triple join — the hash match proves
     // the orientation loses and double-counts nothing.
     "q171_triangles" -> ((s, dir) => {
-      val ib = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-      val edges = ib.as("a")
-        .join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
+      val edges = coPurchaseEdges(Tables.lineitem(s, dir))
       graft.ops.Graph.triangleCounts(edges).orderBy("node")
     }),
 
@@ -1874,13 +1677,7 @@ object JoinQueries {
     // precondition); k chosen so the fixture core is a strict,
     // non-empty subgraph at both SFs.
     "q268_kcore" -> ((s, dir) => {
-      val ib = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-      val und = ib.as("a")
-        .join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
+      val und = coPurchaseEdges(Tables.lineitem(s, dir))
       val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
       graft.ops.Graph.kCore(edges, 4).orderBy("node")
     }),
@@ -2060,16 +1857,8 @@ object JoinQueries {
     // radius communities at sf0.01, so the label histogram carries
     // real structure.
     "q212_label_propagation" -> ((s, dir) => {
-      val eb = Tables.lineitem(s, dir)
-        .filter(col("l_quantity") === 1)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s1"))
-        .distinct()
-      val edges = eb.select(col("c").as("src"), col("s1").as("dst"))
-        .unionByName(eb.select(col("s1").as("src"), col("c").as("dst")))
+      val eb = tradeEdges(s, dir, keep = Some(col("l_quantity") === 1))
+      val edges = bothWays(eb)
       graft.ops.Graph.labelPropagate(edges, supersteps = 3)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"),
@@ -2474,6 +2263,58 @@ object JoinQueries {
     }
     (lTbl, oTbl)
   }
+
+  /** The customer–supplier TRADE GRAPH of the graph queries over
+    * orders: one distinct row per (customer, supplier) pair that share
+    * an order, customers as node 2·o_custkey and suppliers as
+    * 2·l_suppkey + 1 (disjoint key spaces, so one id column holds
+    * both). `keep` filters lineitem before the join; `extra` are more
+    * edge columns over the order's `o_orderdate` (the temporal
+    * queries' day stamp `t`), part of the distinct key. The two id
+    * columns are named `ids`, (c, s1) unless given: a rename above the
+    * distinct would put a projection into the caller's plan. */
+  private def tradeEdges(s: SparkSession, dir: String,
+                         keep: Option[Column] = None,
+                         extra: Seq[Column] = Nil,
+                         ids: (String, String) = ("c", "s1")): DataFrame = {
+    val li = Tables.lineitem(s, dir)
+    val orderCols = Seq("o_orderkey", "o_custkey") ++
+      (if (extra.isEmpty) Nil else Seq("o_orderdate"))
+    keep.fold(li)(li.filter)
+      .select(col("l_orderkey"), col("l_suppkey"))
+      .join(Tables.orders(s, dir).select(orderCols.map(col): _*),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(Seq((col("o_custkey") * 2).as(ids._1),
+        (col("l_suppkey") * 2 + 1).as(ids._2)) ++ extra: _*)
+      .distinct()
+  }
+
+  /** The order date as a yyyymmdd day stamp `t`, a `tradeEdges` extra. */
+  private def yyyymmdd: Column =
+    (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 +
+      dayofmonth(col("o_orderdate"))).cast("long").as("t")
+
+  /** Trade edges (c, s1, rest…) in both directions, as (src, dst, rest…). */
+  private def bothWays(eb: DataFrame): DataFrame = {
+    val rest = eb.columns.toSeq.filterNot(Set("c", "s1")).map(col)
+    eb.select(col("c").as("src") +: col("s1").as("dst") +: rest: _*)
+      .unionByName(eb.select(col("s1").as("src") +: col("c").as("dst") +: rest: _*))
+  }
+
+  /** Every pair of parts bought in one order, once: the self-join of a
+    * distinct (l_orderkey, l_partkey) basket frame `ib` as `a` ⋈ `b`
+    * with a.l_partkey < b.l_partkey. Output-sized (Σ basket²), never
+    * parts². */
+  private def basketPairs(ib: DataFrame): DataFrame =
+    ib.as("a").join(ib.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
+      col("a.l_partkey") < col("b.l_partkey"))
+
+  /** The part CO-PURCHASE graph over lineitem rows `li`: distinct
+    * (u, v), u < v, for parts bought together in an order. */
+  private def coPurchaseEdges(li: DataFrame): DataFrame =
+    basketPairs(li.select(col("l_orderkey"), col("l_partkey")).distinct())
+      .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+      .distinct()
 
   val oracles: Map[String, String] = Map(
     // the IDENTITY under test: the oracle samples the JOIN once by

@@ -14,13 +14,17 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
 
   /** `build`'s result collected, then the query's checkpoints released:
     * nothing the call persisted may still be held. RDD ids grow
-    * monotonically, so a fresh RDD marks where the call's ids start. */
-  private def releasedAfter(label: String)(build: => DataFrame): Unit = {
+    * monotonically, so a fresh RDD marks where the call's ids start.
+    * `held`, if given, is the number of checkpoints the collected
+    * result may still hold before the release. */
+  private def releasedAfter(label: String, held: Option[Int] = None)(
+      build: => DataFrame): Unit = {
     val mark = sc.emptyRDD[Int].id
     def fresh = sc.getPersistentRDDs.keySet.filter(_ > mark).toSet --
       memoIds
     build.collect()
     assert(fresh.nonEmpty, s"$label persisted nothing")
+    held.foreach(n => assert(fresh.size === n, s"$label held $fresh"))
     Checkpoints.releaseQuery()
     assert(fresh.isEmpty, s"$label left RDDs $fresh persisted after releaseQuery")
   }
@@ -42,7 +46,8 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
       Linalg.topComponent(vecs, "id", "vec", 3))
     releasedAfter("q147 prefix similarity join")(
       SparkEntry.queries("q147_prefix_simjoin")(spark, sfDir))
-    releasedAfter("q365 k-truss peel")(
+    // the peel frees each round it supersedes: only the last is held
+    releasedAfter("q365 k-truss peel", held = Some(1))(
       SparkEntry.queries("q365_ktruss")(spark, sfDir))
   }
 

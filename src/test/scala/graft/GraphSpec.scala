@@ -1303,6 +1303,9 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       Graph.articulation(edges, Seq(2L, 3L).toDF("node"), maxHops = 10))
     retainedAfter("deterministicWalks")(
       Graph.deterministicWalks(edges, length = 5))
+    retainedAfter("louvainMove")(
+      Graph.louvainMove(edges.withColumn("w", lit(1L)),
+        (1L to 6L).map(i => (i, i)).toDF("node", "label"), rounds = 3))
     retainedAfter("sssp")(
       Graph.sssp(edges.withColumn("w", lit(2L)), seeds, rounds = 10))
     val dated = edges.withColumn("t", col("src") + col("dst"))
@@ -1326,7 +1329,9 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     // join that plans a shuffle against a checkpoint it could
     // broadcast. Fixtures are the hand-checked bfs, sssp and ccStar
     // inputs above; kCore's is K5 at k = 3, whose minimum degree (4)
-    // leaves nothing to peel.
+    // leaves nothing to peel. katz and deterministicWalks run on the
+    // bfs paths with 10 levels/steps: the longest directed path has 4
+    // edges, so their frontier empties and the loop stops early.
     val paths = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L),
       (9L, 10L)).toDF("src", "dst")
     val diamond = Seq(
@@ -1345,6 +1350,13 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val (core, kCoreJobs) = jobsIn(Graph.kCore(k5, k = 3))
     assert(core.count() === 5L)
     assert((bfsJobs, ssspJobs, ccJobs, kCoreJobs) === ((17, 11, 23, 3)))
+    val (_, katzJobs) = jobsIn(Graph.katz(paths, levels = 10))
+    val (_, walkJobs) = jobsIn(Graph.deterministicWalks(paths, length = 10))
+    assert((katzJobs, walkJobs) === ((20, 14)))
+    // no edges: round 0 is empty and stops the loop
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(Graph.katz(none, levels = 10).count() === 0L)
+    assert(Graph.deterministicWalks(none, length = 10).count() === 0L)
   }
 
   test("a checkpoint is planned from its measured size, and released with it") {
